@@ -610,9 +610,8 @@ def run_skewed(n_base: int = 1_000_000, n_updates: int = 400_000,
     one) on a fresh COPY of the base per run, single-shot pinned
     subprocesses at each parallelism level x write mode. Reports wall,
     events/sec, and the write-amplification aggregates (bytes/files
-    written vs carried) — cow is file-level CoW, cow_bucket is the same
-    engine with file pruning DISABLED (whole-bucket rewrite: the
-    write-amplification comparator), delta is merge-on-read winners-only,
+    written vs carried) — cow_member is file-level CoW (key-range +
+    membership-bloom pruning), delta is merge-on-read winners-only,
     delta_chain3 adds the chain-length compaction policy."""
     from etl_spark.session import get_spark
 
@@ -623,23 +622,20 @@ def run_skewed(n_base: int = 1_000_000, n_updates: int = 400_000,
             work, n_base, n_updates, n_buckets)
 
         modes = (
-            ("cow", "cow", None, {"ETL_SPARK_FILELEVEL": "1"}),
-            ("cow_member", "cow", None, {"ETL_SPARK_FILELEVEL": "2"}),
-            ("cow_bucket", "cow", None, {"ETL_SPARK_FILELEVEL": "0"}),
-            ("delta", "delta", None, None),
-            ("delta_chain3", "delta", ["--compact-chain-len", "3"], None),
+            ("cow_member", "cow", None),
+            ("delta", "delta", None),
+            ("delta_chain3", "delta", ["--compact-chain-len", "3"]),
         )
         runs = []
         for cores in sorted(levels):
-            for mode, wm, extra, env_extra in modes:
+            for mode, wm, extra in modes:
                 probe = _host_probe()
                 tdir = os.path.join(work, f"t_{mode}_{cores}")
                 shutil.copytree(base_root, tdir)
                 res = _run_replay_subprocess(
                     upd_log, tdir, cores,
                     batch_size=max(n_updates // 4, 1),
-                    write_mode=wm, extra_args=extra, n_buckets=n_buckets,
-                    env_extra=env_extra)
+                    write_mode=wm, extra_args=extra, n_buckets=n_buckets)
                 runs.append({
                     "mode": mode, "cores": cores,
                     "eps": res["events_per_sec"], "secs": res["secs"],
@@ -656,7 +652,7 @@ def run_skewed(n_base: int = 1_000_000, n_updates: int = 400_000,
         hashes = {
             mode: _table_state_hash(
                 spark, os.path.join(work, f"t_{mode}_{big}"))
-            for mode, _, _, _ in modes
+            for mode, _, _ in modes
         }
         out = {
             "n_base_events": n_base,
@@ -807,102 +803,6 @@ Final state hash identical across every (mode, parallelism) cell:
 """
 
 
-def run_append(n_base: int = 400_000, n_appends: int = 160_000,
-               cores: int = 8) -> dict:
-    """Append-only ingest demo for the key-MEMBERSHIP pruning stage
-    (ETL_SPARK_FILELEVEL=2): a base table of keys [0, K), then an
-    insert-only log over the DISJOINT keyspace [K, 2K) whose derived
-    paths interleave LEXICOGRAPHICALLY into the base files' (repo,path)
-    ranges — every insert is a random dart inside some file's range, so
-    the range probe must rewrite ~every file, while the membership
-    probe (write-time per-file key blooms tested inside the same
-    broadcast probe join — metadata-only, no data-file read) proves no
-    key matches and carries everything. Byte/row/file metrics are
-    deterministic, so this evidence is valid regardless of host
-    weather; single level — write amplification does not depend on
-    core count."""
-    from etl_spark.cdc.gen import GenConfig, write_events
-    from etl_spark.cdc.lake import SnapshotTable
-    from etl_spark.cdc.maintain import compact
-    from etl_spark.cdc.runner import read_event_log, replay
-    from etl_spark.session import get_spark
-
-    n_buckets = 64
-    work = tempfile.mkdtemp(prefix="bench_append_", dir=_workroot())
-    spark = get_spark("bench-append-gen", master=f"local[{CPUS}]")
-    try:
-        base_log = os.path.join(work, "base_log")
-        app_log = os.path.join(work, "app_log")
-        write_events(
-            spark,
-            GenConfig(n_events=n_base, n_keys=n_base, n_repos=200,
-                      hot_frac=0.0, p_insert=1.0, p_update=0.0,
-                      max_content_reps=16, seed=29),
-            base_log, n_files=64,
-        )
-        write_events(
-            spark,
-            GenConfig(n_events=n_appends, n_keys=n_base, n_repos=200,
-                      hot_frac=0.0, p_insert=1.0, p_update=0.0,
-                      key_offset=n_base, base_lsn=n_base,
-                      max_content_reps=16, seed=29),
-            app_log, n_files=64,
-        )
-        base = SnapshotTable(spark, os.path.join(work, "base"),
-                             n_buckets=n_buckets)
-        replay(spark, read_event_log(spark, base_log), base,
-               batch_size=n_base)
-        base_rows = base.read().count()
-        compact(spark, base, max_files_per_bucket=0,
-                target_file_rows=max(base_rows // n_buckets // 24, 1))
-        spark.stop()
-
-        runs = []
-        for mode, lvl in (("cow_range", "1"), ("cow_member", "2")):
-            probe = _host_probe()
-            tdir = os.path.join(work, f"t_{mode}")
-            shutil.copytree(base.root, tdir)
-            res = _run_replay_subprocess(
-                app_log, tdir, cores,
-                batch_size=max(n_appends // 4, 1),
-                n_buckets=n_buckets,
-                env_extra={"ETL_SPARK_FILELEVEL": lvl})
-            runs.append({
-                "mode": mode, "cores": cores,
-                "eps": res["events_per_sec"], "secs": res["secs"],
-                "bytes_written": res["bytes_written"],
-                "rows_out": res["rows_out"],
-                "files_rewritten": res["files_rewritten"],
-                "files_carried": res["files_carried"],
-                "manifest_bytes": res.get("manifest_bytes", 0),
-                # per-phase walls: the membership probe must show NO
-                # extra scan phase vs range — bloom exoneration lives
-                # inside the same prepare-stage probe job
-                "phase_secs": res.get("phase_secs"),
-                "probe_mops8": probe,
-            })
-        spark = get_spark("bench-append-hash", master=f"local[{CPUS}]")
-        hashes = {
-            mode: _table_state_hash(spark, os.path.join(work, f"t_{mode}"))
-            for mode, _ in (("cow_range", 1), ("cow_member", 2))
-        }
-        out = {
-            "n_base_events": n_base,
-            "n_append_events": n_appends,
-            "n_buckets": n_buckets,
-            "base_rows": base_rows,
-            "runs": runs,
-            "state_match": len(set(hashes.values())) == 1,
-            "state_hashes": hashes,
-        }
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/append.json", "w") as f:
-            json.dump(out, f, indent=1)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def _live_metadata_and_files(root: str) -> tuple[int, int]:
     """(live metadata bytes, live data-file count) at a table's latest
     version: the top manifest plus every shard it references. The byte
@@ -917,21 +817,14 @@ def _live_metadata_and_files(root: str) -> tuple[int, int]:
     with open(top) as f:
         m = json.load(f)
     files = 0
-    for e in m["files"].values():
-        if isinstance(e, dict) and "ptr" in e:
-            p = os.path.join(root, "manifests", e["ptr"])
-            meta += os.path.getsize(p)
-            with open(p) as f:
-                e = json.load(f)
-        if isinstance(e, str):
-            files += len(_glob.glob(os.path.join(root, e, "*.parquet")))
-        elif isinstance(e, dict):
-            files += len(e["base"])
-            for d in e.get("deltas") or []:
-                files += len(_glob.glob(os.path.join(root, d, "*.parquet")))
-        else:
-            for d in e:
-                files += len(_glob.glob(os.path.join(root, d, "*.parquet")))
+    for ptr in m["files"].values():
+        p = os.path.join(root, "manifests", ptr["ptr"])
+        meta += os.path.getsize(p)
+        with open(p) as f:
+            e = json.load(f)
+        files += len(e["base"])
+        for d in e["deltas"]:
+            files += len(_glob.glob(os.path.join(root, d, "*.parquet")))
     return meta, files
 
 
@@ -1070,8 +963,9 @@ def _manifest_kb(x: dict) -> str:
 
 
 def _append_md_section() -> str:
-    """Render the append-only membership-probe table from
-    BENCH/append.json (written by --append); omitted until measured."""
+    """Render the recorded append-only membership-probe table from
+    BENCH/append.json (the run that wrote it compared two pruning modes
+    the engine no longer has); omitted when absent."""
     try:
         with open("BENCH/append.json") as f:
             r = json.load(f)
@@ -1096,12 +990,12 @@ range, the adversarial workload for range-pruned copy-on-write.
 |---|---|---|---|---|---|---|---|---|---|
 {rows}
 
-`cow_range` (ETL_SPARK_FILELEVEL=1) prunes on per-file key-range
-metadata only: the darts force it to rewrite ~every file. `cow_member`
-(=2, the DEFAULT) also consults the write-time per-file key-membership
-blooms — a broadcast-metadata filter inside the same probe job, no data
-file read: no batch key is a member, every file carries by reference,
-and write cost drops to O(batch). `manifest KB` is the commit METADATA
+`cow_range` (range-only pruning, since removed) prunes on per-file
+key-range metadata only: the darts force it to rewrite ~every file.
+`cow_member` (the engine's only pruning path) also consults the
+write-time per-file key-membership blooms — a broadcast-metadata filter
+inside the same probe job, no data file read: no batch key is a member,
+every file carries by reference, and write cost drops to O(batch). `manifest KB` is the commit METADATA
 written (new content-addressed shards + the pointer map): carried
 buckets cost one pointer each, so it stays O(touched refs) per batch —
 flat in live-file count. Final state hash identical across both modes:
@@ -1142,12 +1036,13 @@ cross-session medians).
 Reading it: `cow` is FILE-LEVEL CoW (range pruning) — it rewrites only
 the files whose (repo,path) range intersects the batch's keys; carried
 files are referenced, not copied. `cow_member` adds the write-time
-key-membership blooms (the default engine mode). `cow_bucket` is the
-SAME engine with the pruning probe disabled (ETL_SPARK_FILELEVEL=0):
-every touched bucket is rewritten whole — the write-amplification
-comparator; the cow-vs-cow_bucket gap in MB/rows written is the
-file-level win on this workload. `delta` writes winners only (O(batch))
-and defers the rewrite to compaction; `delta_chain3` bounds read
+key-membership blooms (the engine's only pruning path). `cow_bucket` is
+the SAME engine with the pruning probe disabled: every touched bucket
+is rewritten whole — the write-amplification comparator; the
+cow-vs-cow_bucket gap in MB/rows written is the file-level win on this
+workload (`cow` and `cow_bucket` are recorded runs of pruning modes
+since removed). `delta` writes winners only (O(batch)) and defers the
+rewrite to compaction; `delta_chain3` bounds read
 amplification at chain length 3 by folding hot buckets as they exceed
 it (the folds' bytes are included). Final state hash identical across
 all modes
@@ -1922,10 +1817,6 @@ def main() -> None:
                          "(file-level) vs delta vs chain-policy at two "
                          "parallelism levels -> BENCH/skewed.json + "
                          "BENCH/BASELINE.md refresh")
-    ap.add_argument("--append", action="store_true",
-                    help="append-only ingest: membership (FILELEVEL=2) vs "
-                         "range (=1) file pruning under insert fan-out -> "
-                         "BENCH/append.json + BENCH/BASELINE.md refresh")
     ap.add_argument("--topology", action="store_true",
                     help="constant-8-core topology ladder: local[8] vs "
                          "1x8 / 2x4 / 4x2 standalone executors -> "
@@ -1949,17 +1840,6 @@ def main() -> None:
     if args.manifest_flat:
         res = run_manifest_flat()
         try:  # refresh BASELINE.md's flatness section from the new data
-            with open("BENCH/scaling.json") as f:
-                write_scaling_md(json.load(f))
-        except (OSError, ValueError):
-            pass
-        print(json.dumps(res))
-    elif args.append:
-        res = run_append(
-            int(os.environ.get("SPARK_GRAFT_APPEND_BASE", "400000")),
-            int(os.environ.get("SPARK_GRAFT_APPEND_EVENTS", "160000")),
-        )
-        try:  # refresh BASELINE.md's append section from the new data
             with open("BENCH/scaling.json") as f:
                 write_scaling_md(json.load(f))
         except (OSError, ValueError):

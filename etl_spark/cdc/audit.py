@@ -7,7 +7,10 @@ count checks sprinkled through the connectors (e.g. per-run row-count
 logging in full_incidents/replication_otrs_to_dwh/main.py); here they
 are one systematic pass.
 
-Structural checks are driver-side metadata reads (no Spark job); the
+Structural checks are driver-side metadata reads (no Spark job) —
+among them ``manifest_shape``: every bucket must store a shard pointer
+to a ``{"base", "deltas"}`` entry; a table with any other form (e.g.
+written by an older engine) fails here before any data is read. The
 data invariants are ONE column-pruned Spark aggregation over the
 committed snapshot:
 
@@ -49,6 +52,16 @@ def audit_table(spark: SparkSession, table: SnapshotTable) -> dict:
     v = table.version()
     manifest_path = os.path.join(table.root, "manifests", f"v{v}.json")
     checks["latest_manifest_exists"] = v == 0 or os.path.isfile(manifest_path)
+    bad: dict[str, str] = {}
+    raw = table._raw_manifest(v)["files"] if v else {}  # noqa: SLF001
+    for b, ptr in raw.items():
+        try:
+            table._resolve_files({b: ptr})  # noqa: SLF001
+        except ValueError as e:
+            bad[b] = str(e)
+    checks["manifest_shape"] = {"ok": not bad, "bad": bad}
+    if bad:
+        return {"ok": False, "version": v, "checks": checks}
     m = table.manifest()
     dirs = table._bucket_dirs(m)  # noqa: SLF001
     missing = [d for d in dirs if not os.path.exists(d)]

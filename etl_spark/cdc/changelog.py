@@ -86,10 +86,10 @@ def _file_tags(
     """Diff-side tags for the interval, at FILE granularity. Walking the
     manifest chain per bucket, each commit where a bucket's file SET
     changes contributes the outgoing files as the ``o`` side and the
-    incoming files as the ``n`` side of that commit's diff. Dir-form
-    entries expand to their parquet files (driver listing, memoized —
-    committed dirs are immutable), so every tag joins the scan on one
-    uniform file key whatever manifest form the commit used. Returns
+    incoming files as the ``n`` side of that commit's diff. Base refs
+    are files already; delta dirs expand to their parquet files (driver
+    listing, memoized — committed dirs are immutable), so every tag
+    joins the scan on one uniform file key. Returns
     ``(ch_tags, b_ranges)``:
 
     - ``ch_tags``: ``(file, commit, 'o'|'n')`` for the non-shared sides.

@@ -11,9 +11,10 @@ Physical plan (two Spark actions):
    predicate's columns + the key hash.
 2. rewrite: re-read ONLY the matched buckets, keep rows where the
    predicate is not TRUE (false or NULL both survive — SQL DELETE
-   semantics), write them as the new version's bucket dirs. Untouched
-   buckets carry forward by manifest reference; buckets whose every row
-   matched simply disappear from the manifest.
+   semantics), write them as the new version's base files (the commit
+   harvests their footer key ranges, so later merges prune them file by
+   file). Untouched buckets carry forward by manifest reference; buckets
+   whose every row matched simply disappear from the manifest.
 
 The commit does not advance ``last_lsn`` — a delete is table
 maintenance, not log progress, so replay/resume semantics are

@@ -15,22 +15,28 @@ table layer hand-builds the Iceberg properties the engine needs:
   same rename as the data — data and cursor can never diverge
   (exactly-once; the reference's Airflow ``execution_date`` cursor is
   committed separately and relies on idempotent upserts instead).
-- **Bucket-scoped copy-on-write**: the manifest maps bucket id -> data
-  dir; a batch rewrites only touched buckets and carries the rest
-  forward by reference, so MERGE cost scales with the update footprint,
-  not table size.
+- **One manifest entry shape** (the Iceberg manifest-entry analog): the
+  manifest maps bucket id -> ``{"base": [file ref...], "deltas": [delta
+  dir...]}``; a file ref is one parquet FILE with its footer key range
+  and optional key-membership bloom (see ``_entry_parts``). Every commit
+  kind writes this shape only, and only this module builds it.
+- **Bucket-scoped, file-level copy-on-write**: a batch rewrites only the
+  touched buckets, and within them only the files whose key range AND
+  bloom admit a batch key (``read_for_merge``, the one pruning path);
+  the rest carry forward by reference, so MERGE cost scales with the
+  update footprint in files, not table size.
 - **Merge-on-read delta chains** (deferred-compaction CoW, the Iceberg
-  MoR / Hudi analog): a bucket's manifest entry may instead be a LIST of
-  dirs — a base followed by delta dirs in commit order. A delta commit
-  appends only the batch's winner rows (deletes as ``_tombstone`` rows),
-  so WRITE cost per batch is O(batch), independent of table size — the
-  shape that survives 10^10-event ingest where even bucket-scoped CoW
-  rewrites ~the whole table every batch once updates spread across all
-  buckets. Reads reconstruct the current row per key (max ``_last_lsn``
-  wins, tombstones drop); ``maintain.compact`` folds a chain back into
-  the pure CoW layout, after which reads take the plain-scan fast path
-  again. Final state is byte-identical to CoW replay (tests/test_delta).
-
+  MoR / Hudi analog): a delta commit appends the batch's winner rows
+  (deletes as ``_tombstone`` rows) as one more dir in the bucket's
+  ``deltas``, so WRITE cost per batch is O(batch), independent of table
+  size — the shape that survives 10^10-event ingest where even
+  bucket-scoped CoW rewrites ~the whole table every batch once updates
+  spread across all buckets. Reads reconstruct the current row per key
+  (max ``_last_lsn`` wins, tombstones drop); ``maintain.compact`` folds
+  a chain back into plain base files, after which reads take the
+  plain-scan fast path again. A bucket born in delta mode has an empty
+  ``base``: its first delta dir plays the head. Final state is
+  byte-identical to CoW replay (tests/test_delta).
 - **Sharded manifests** (the Iceberg manifest-list / manifest-file
   split): per-file refs for a bucket live in an immutable,
   content-addressed SHARD file; the per-version manifest stores one
@@ -43,9 +49,11 @@ table layer hand-builds the Iceberg properties the engine needs:
   Content addressing makes carry detection trivial (same entry ->
   same shard file, byte-identical, never rewritten) and de-duplicates
   across versions: rollback and time travel reference old shards for
-  free. ``manifest()`` returns the RESOLVED form (entries inline,
-  shards parsed once per session via an immutable cache), so every
-  consumer reads one uniform shape.
+  free. Shard pointers are the only on-disk form of an entry;
+  ``manifest()`` returns the RESOLVED form (shards parsed once per
+  session via an immutable cache), and an entry of any other shape — a
+  table written by an older engine — raises ``ValueError`` naming the
+  bucket rather than being misread.
 
 Layout:
     root/
@@ -86,43 +94,50 @@ class SnapshotExpiredError(ValueError):
 TOMBSTONE_COL = "_tombstone"
 
 
-def _entry_parts(entry) -> tuple[list[list], list[list], list[str]]:
-    """Normalize a manifest ``files`` value to
-    ``(plain_refs, head_refs, tail_dirs)``.
+def _entry_parts(entry: dict) -> tuple[list[list], list[list], list[str]]:
+    """Split a resolved bucket entry ``{"base": [ref...], "deltas":
+    [dir...]}`` into ``(plain_refs, head_refs, tail_dirs)``.
 
     A *ref* is ``[relpath, rows, lo_repo, lo_path, hi_repo, hi_path]``
-    plus an optional 7th element — the key-membership bloom
-    ``{"m", "k", "b"}`` stamped by build_file_blooms (``rows``/bounds
-    may be None when unknown; a ref without bounds/bloom is always
-    treated as possibly containing any key). Three stored forms:
+    for one parquet file — bounds from its footer (scan_written_footers;
+    None when the footer gave none) — plus an optional 7th element, the
+    key-membership bloom ``{"m", "k", "b"}`` (build_file_blooms).
 
-    - ``str`` — one pure-CoW base dir (legacy): one plain ref, no stats.
-    - ``list[str]`` — merge-on-read dir chain: head dir + delta dirs.
-      The head may itself hold tombstones (a bucket born in delta
-      mode), so it rides the head side, never the plain side.
-    - ``dict`` — file-level CoW: ``{"base": [ref...], "deltas":
-      [dir...]}``. Base refs are individual parquet FILES with key-range
-      stats (the Iceberg manifest-entry analog); they never hold
-      tombstones, so with no deltas the bucket reads as a plain scan.
-
-    ``plain_refs`` read as a plain scan (exactly one live row per key
-    across them); ``head_refs``/``tail_dirs`` require the merge-on-read
-    reconstruction (``_read_merged``)."""
-    if isinstance(entry, str):
-        return [[entry, None, None, None, None, None]], [], []
-    if isinstance(entry, dict):
-        base = [list(r) for r in entry["base"]]
-        deltas = list(entry.get("deltas") or [])
-        return ([], base, deltas) if deltas else (base, [], [])
-    dirs = list(entry)
-    return [], [[dirs[0], None, None, None, None, None]], dirs[1:]
+    With no deltas the base refs are ``plain``: exactly one live row per
+    key across them, read as a plain scan. With deltas the bucket needs
+    the merge-on-read reconstruction (``_read_merged``): the base refs
+    are the head and the delta dirs the tails — except for a bucket
+    born in delta mode (empty base), whose first delta dir is the head.
+    That head may itself hold tombstones, so it rides the head side,
+    never the plain side, and its rows never enter the tails' winner
+    aggregate."""
+    base = [list(r) for r in entry["base"]]
+    deltas = list(entry["deltas"])
+    if not deltas:
+        return base, [], []
+    if base:
+        return [], base, deltas
+    return [], [[deltas[0], None, None, None, None, None]], deltas[1:]
 
 
-def _chain(entry) -> list[str]:
-    """Every data path (dir or file) a manifest ``files`` value
+def _chain(entry: dict) -> list[str]:
+    """Every data path (base file, then delta dir) a bucket entry
     references, base-to-newest-delta order."""
-    plain, heads, tails = _entry_parts(entry)
-    return [r[0] for r in plain] + [r[0] for r in heads] + tails
+    return [r[0] for r in entry["base"]] + list(entry["deltas"])
+
+
+def _entry_shape_error(entry) -> str | None:
+    """Why ``entry`` is not a ``{"base": [6- or 7-element refs],
+    "deltas": [dir...]}`` dict, or None when it is."""
+    if not (isinstance(entry, dict) and sorted(entry) == ["base", "deltas"]
+            and isinstance(entry["base"], list)
+            and isinstance(entry["deltas"], list)):
+        return f"entry {json.dumps(entry)[:80]} is not a {{base, deltas}} dict"
+    if not all(isinstance(r, list) and len(r) in (6, 7) for r in entry["base"]):
+        return "a base ref is not a 6- or 7-element list"
+    if not all(isinstance(d, str) for d in entry["deltas"]):
+        return "a delta is not a dir path"
+    return None
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -235,7 +250,7 @@ def scan_written_footers(root: str, out_dir: str) -> dict[str, dict]:
     return out
 
 
-# Key-membership bloom parameters (file-level CoW, pruning level 2):
+# Key-membership bloom parameters (file-level CoW pruning):
 # a file is carried only if EVERY range-hitting batch key misses its
 # bloom, so the per-key FP compounds — with R keys probing one file,
 # P(carry) = (1-fp)^R. Sized at ~20 bits/key (power-of-2 rounding makes
@@ -287,10 +302,10 @@ def build_file_blooms(
     ``harvest`` (appended as ref[6] = {"m", "k", "b"}), from ONE
     distributed pass over the freshly written files' two key columns.
     This is the Iceberg puffin/bloom-metadata analog that makes
-    membership pruning (ETL_SPARK_FILELEVEL=2) METADATA-ONLY at merge
-    time: the per-batch probe becomes a broadcast-join filter over the
-    batch keys instead of a read of every range-hit file's key columns
-    (which re-pays O(working-set file bytes) every batch).
+    membership pruning METADATA-ONLY at merge time: the per-batch probe
+    becomes a broadcast-join filter over the batch keys instead of a
+    read of every range-hit file's key columns (which re-pays
+    O(working-set file bytes) every batch).
 
     Build cost is O(batch output rows) on the files just written —
     read back from page cache immediately after the write — vs the
@@ -313,13 +328,15 @@ def build_file_blooms(
     for b, v in harvest.items():
         if eligible is not None and b not in eligible:
             continue
+        n_slots = len(file_ref)
         for ref in v["files"]:
             rows = int(ref[1] or 0)
             if rows <= 0 or rows > BLOOM_MAX_ROWS:
                 continue
             m_bits = 1 << max(10, (rows * BLOOM_BITS_PER_KEY - 1).bit_length())
             file_ref["/".join(ref[0].split("/")[-2:])] = (ref, m_bits)
-        if v["files"]:
+        # scan the bucket dir only if one of its refs got a bloom slot
+        if len(file_ref) > n_slots:
             paths.append(os.path.join(root, v["dir"]))
     if not file_ref:
         return
@@ -416,7 +433,7 @@ class SnapshotTable:
         # buckets). Adopt the manifest's value; the constructor argument
         # only parameterizes NEW tables.
         if self.version() > 0:
-            self.n_buckets = int(self.manifest()["n_buckets"])
+            self.n_buckets = int(self._raw_manifest(self.version())["n_buckets"])
 
     # --- manifest / pointer ------------------------------------------------
 
@@ -431,25 +448,36 @@ class SnapshotTable:
         except FileNotFoundError:
             return 0
 
+    def _raw_manifest(self, version: int) -> dict:
+        """The on-disk manifest of ``version``: bucket -> shard pointer."""
+        with open(os.path.join(self.root, "manifests", f"v{version}.json")) as f:
+            return json.load(f)
+
     def _resolve_files(self, files: dict) -> dict:
-        """Resolve shard pointers (``{"ptr": relpath}``) to their inline
+        """Resolve shard pointers (``{"ptr": relpath}``) to their
         entries, memoizing both directions — shard files are immutable,
-        so a parsed entry is valid forever. Inline (legacy) entries pass
-        through untouched. Raises FileNotFoundError when a pointed-to
-        shard was expired (callers map it to SnapshotExpiredError)."""
+        so a parsed (and shape-checked) entry is valid forever. Raises
+        ValueError naming the bucket when the stored value is not a
+        pointer or the shard is not a ``{"base", "deltas"}`` entry, and
+        FileNotFoundError when a pointed-to shard was expired (callers
+        map it to SnapshotExpiredError)."""
         out = {}
         for b, e in files.items():
-            if isinstance(e, dict) and "ptr" in e:
-                ptr = e["ptr"]
-                ent = self._shard_cache.get(ptr)
-                if ent is None:
-                    with open(os.path.join(self.root, "manifests", ptr)) as f:
-                        ent = json.load(f)
-                    self._shard_cache[ptr] = ent
-                    self._entry_ptr[id(ent)] = (ent, ptr)
-                out[b] = ent
-            else:
-                out[b] = e
+            if not (isinstance(e, dict) and list(e) == ["ptr"]):
+                raise ValueError(
+                    f"bucket {b}: manifest stores {json.dumps(e)[:80]}, "
+                    "not a shard pointer")
+            ptr = e["ptr"]
+            ent = self._shard_cache.get(ptr)
+            if ent is None:
+                with open(os.path.join(self.root, "manifests", ptr)) as f:
+                    ent = json.load(f)
+                err = _entry_shape_error(ent)
+                if err:
+                    raise ValueError(f"bucket {b}: shard {ptr}: {err}")
+                self._shard_cache[ptr] = ent
+                self._entry_ptr[id(ent)] = (ent, ptr)
+            out[b] = ent
         return out
 
     def manifest(self) -> dict:
@@ -462,8 +490,7 @@ class SnapshotTable:
                 "files": {},
                 "n_buckets": self.n_buckets,
             }
-        with open(os.path.join(self.root, "manifests", f"v{v}.json")) as f:
-            m = json.load(f)
+        m = self._raw_manifest(v)
         m["files"] = self._resolve_files(m["files"])
         return m
 
@@ -526,10 +553,8 @@ class SnapshotTable:
         if version == 0:
             return {"version": 0, "last_lsn": 0, "dyn_schema": [],
                     "files": {}, "n_buckets": self.n_buckets}
-        path = os.path.join(self.root, "manifests", f"v{version}.json")
         try:
-            with open(path) as f:
-                m = json.load(f)
+            m = self._raw_manifest(version)
             m["files"] = self._resolve_files(m["files"])
         except FileNotFoundError:
             raise SnapshotExpiredError(
@@ -626,38 +651,42 @@ class SnapshotTable:
         (the Iceberg per-file manifest-entry analog): returns
         ``(target_df, cold_refs, stats)``.
 
-        Within each touched bucket whose manifest entry carries per-file
-        key-range stats, only the files whose conservative (repo, path)
-        interval can contain a batch key are read (``target_df``); the
-        rest are COLD — returned in ``cold_refs`` per bucket so the
-        commit carries them forward by reference instead of rewriting
-        them. This is what caps CoW write amplification when updates
-        concentrate in a small working set: merge cost scales with the
-        update footprint in FILES, not in buckets. Soundness: a file's
-        stored bounds are a superset of its true key interval
-        (scan_written_footers), and every batch key hashes to exactly
-        one bucket, so any existing row of a batch key lives in a HIT
-        file — a cold file can never hold a row the merge should have
-        replaced or deleted.
+        Within each touched bucket with no delta chain, only the base
+        files that can hold a batch key are read (``target_df``): the
+        file's conservative (repo, path) interval must contain the key
+        AND its write-time key-membership bloom must admit it. The rest
+        are COLD — returned in ``cold_refs`` per bucket so the commit
+        carries them forward by reference instead of rewriting them.
+        This is what caps CoW write amplification when updates
+        concentrate in a small working set, and under insert fan-out,
+        where a scattered new key range-hits a file without matching
+        any row in it: merge cost scales with the update footprint in
+        FILES, not in buckets.
 
-        Buckets still in legacy dir form (no stats) are read whole, as
-        are merge-on-read chains (their delta dirs may supersede any
-        base key, so base files cannot be carried independently); both
-        get file-level entries the first time they are rewritten or
-        compacted. The hit decision is one tiny Spark job: the slim
-        batch key set joined to a broadcast of the candidate file
-        ranges (bucket-equality hash join + range filter + key-
-        membership bloom test, all metadata carried by the broadcast —
-        no data file is ever read by the probe) — zero jobs when no
-        candidate has stats.
+        Soundness: a file's stored bounds are a superset of its true key
+        interval (scan_written_footers), blooms have no false negatives,
+        and every batch key hashes to exactly one bucket, so any
+        existing row of a batch key lives in a HIT file — a cold file
+        can never hold a row the merge should have replaced or deleted.
+        Every decision fails closed: a ref whose footer gave no bounds
+        is read, and a ref without a bloom is tested on its range alone;
+        a bloom false positive only costs an unnecessary rewrite.
+
+        A bucket with a delta chain is read whole (its deltas may
+        supersede any base key, so base files cannot be carried
+        independently); the rewrite commits it back as plain base files.
+        The hit decision is one tiny Spark job: the slim batch key set
+        joined to a broadcast of the candidate refs' ranges and bloom
+        words (bucket-equality hash join + range filter + membership
+        test — no data file is ever read by the probe); zero jobs when
+        no candidate has bounds.
         """
         files = manifest["files"]
         schema = self.table_schema([tuple(c) for c in manifest["dyn_schema"]])
-        plain_paths: list[str] = []   # stat-less refs: always read
+        plain_paths: list[str] = []   # refs read in full
         heads: list[str] = []
         tails: list[str] = []
-        cand: list[tuple] = []        # (bucket, seq, ref) with bounds
-        refs_by_id: dict[tuple[int, int], list] = {}
+        refs_by_id: dict[tuple[int, int], list] = {}  # candidates with bounds
         for b in touched:
             k = str(b)
             if k not in files:
@@ -669,40 +698,14 @@ class SnapshotTable:
                 if r[2] is None:
                     plain_paths.append(os.path.join(self.root, r[0]))
                 else:
-                    cand.append((int(b), i, r[2], r[3], r[4], r[5]))
                     refs_by_id[(int(b), i)] = r
         cold: dict[str, list[list]] = {}
-        n_hit_pruned = 0
-        lvl = os.environ.get("ETL_SPARK_FILELEVEL", "2")
-        # ETL_SPARK_FILELEVEL=0 disables the pruning probe (ops knob for
-        # workloads known to touch every file every batch, where the one
-        # extra slim job per batch buys nothing)
-        if cand and lvl == "0":
-            for ref in refs_by_id.values():
-                plain_paths.append(os.path.join(self.root, ref[0]))
-            cand = []
-        if cand:
+        if refs_by_id:
             from .dedup import bucket_expr
 
-            # level 2 (default) adds the KEY-MEMBERSHIP test to the same
-            # probe job: a range hit only proves a batch key falls in the
-            # file's (repo,path) interval — a pure INSERT whose new key
-            # lands inside the interval range-hits the file without
-            # matching any row in it. The per-file bloom built at write
-            # time (build_file_blooms) exonerates such files as a
-            # broadcast-metadata filter — no data file is ever read by
-            # the probe — which is what keeps file-level CoW effective
-            # under insert fan-out, where every scattered new key is a
-            # random dart into some file's range. Soundness: blooms have
-            # no false negatives, so a carried file provably contains NO
-            # batch key; a false positive (or a ref with no bloom, which
-            # always hits — fail closed) only costs an unnecessary
-            # rewrite. Level 1 is the range-only probe for tables whose
-            # write path skipped bloom builds.
-            use_bloom = lvl == "2"
             rows = []
             for (b, i), r in sorted(refs_by_id.items()):
-                bw = _bloom_words(r) if use_bloom else None
+                bw = _bloom_words(r)
                 rows.append(
                     (b, i, r[2], r[3], r[4], r[5],
                      bw[0] if bw else None, bw[1] if bw else None)
@@ -721,15 +724,11 @@ class SnapshotTable:
             le_hi = (F.col("repo") < F.col("hr")) | (
                 (F.col("repo") == F.col("hr")) & (F.col("path") <= F.col("hp"))
             )
-            cond = ge_lo & le_hi
-            if use_bloom:
-                cond = cond & (
-                    F.col("_m").isNull() | F.expr(_bloom_member_sql())
-                )
+            member = F.col("_m").isNull() | F.expr(_bloom_member_sql())
             hit_ids = {
                 (r["b"], r["i"])
                 for r in keys.join(F.broadcast(rdf), ["b"])
-                .where(cond)
+                .where(ge_lo & le_hi & member)
                 .select("b", "i")
                 .distinct()
                 .collect()
@@ -737,7 +736,6 @@ class SnapshotTable:
             for (b, i), ref in refs_by_id.items():
                 if (b, i) in hit_ids:
                     plain_paths.append(os.path.join(self.root, ref[0]))
-                    n_hit_pruned += 1
                 else:
                     cold.setdefault(str(b), []).append(ref)
         stats = {
@@ -849,34 +847,32 @@ class SnapshotTable:
         dyn_schema: list[tuple[str, str]],
         metrics: dict,
         full_rewrite: bool = False,
-        bucket_entries: dict | None = None,
+        bucket_refs: dict | None = None,
     ) -> dict:
-        """Publish version N: new bucket dirs + carried-forward references.
+        """Publish version N: new base files + carried-forward entries.
 
-        Default (bucket-scoped CoW): untouched buckets keep their old
-        data-dir references; touched buckets point into written_dir
-        (buckets that ended empty simply disappear from the manifest).
-        ``full_rewrite=True`` (rename/widen migration): nothing carries.
-        ``bucket_entries`` (file-level CoW): the caller supplies the new
-        manifest value per touched bucket — typically a dict of
-        per-file refs mixing freshly written files with COLD files of
-        the previous version carried forward by reference — and
-        written_dir is not scanned (empty entries drop the bucket).
+        Untouched buckets keep their entries by reference; each touched
+        bucket gets a fresh plain entry ``{"base": refs, "deltas": []}``
+        (a bucket left with no refs disappears from the manifest).
+        ``full_rewrite=True`` (rename/widen migration, rebucket): nothing
+        carries. The refs come from ``bucket_refs`` (bucket -> file
+        refs) when the caller has them — a file-level CoW merge mixes
+        freshly written files with COLD refs of the previous version
+        carried forward by reference — else from the footers of the
+        files under ``written_dir`` (scan_written_footers).
         """
         prev = self.manifest()
-        files: dict[str, str] = {} if full_rewrite else dict(prev["files"])
+        files: dict[str, dict] = {} if full_rewrite else dict(prev["files"])
         for b in touched_buckets:
             files.pop(str(b), None)
-        if bucket_entries is not None:
-            for b, e in bucket_entries.items():
-                if e and (not isinstance(e, dict) or e.get("base")):
-                    files[str(b)] = e
-        elif written_dir:
-            rel = os.path.relpath(written_dir, self.root)
-            for entry in sorted(os.listdir(written_dir)):
-                if entry.startswith("_bucket="):
-                    b = entry.split("=", 1)[1]
-                    files[b] = os.path.join(rel, entry)
+        if bucket_refs is None and written_dir:
+            bucket_refs = {
+                b: v["files"]
+                for b, v in scan_written_footers(self.root, written_dir).items()
+            }
+        for b, refs in (bucket_refs or {}).items():
+            if refs:
+                files[str(b)] = {"base": refs, "deltas": []}
         manifest = {
             "version": version,
             "parent": prev["version"],
@@ -900,26 +896,20 @@ class SnapshotTable:
         """Publish version N as a merge-on-read DELTA commit: every
         ``_bucket=`` dir under ``delta_dir`` APPENDS to its bucket's
         chain instead of replacing it. Untouched buckets carry forward
-        unchanged. Readers reconstruct via ``_read_merged``; compaction
-        (maintain.compact) folds a chain back to a single base dir."""
+        unchanged; a bucket new to the table starts with an empty base.
+        Readers reconstruct via ``_read_merged``; compaction
+        (maintain.compact) folds a chain back to plain base files."""
         prev = self.manifest()
         files: dict = dict(prev["files"])
         rel = os.path.relpath(delta_dir, self.root)
         for entry in sorted(os.listdir(delta_dir)):
             if entry.startswith("_bucket="):
                 b = entry.split("=", 1)[1]
-                new = os.path.join(rel, entry)
-                cur = files.get(b)
-                if isinstance(cur, dict):
-                    # file-level base keeps its per-file refs; the delta
-                    # appends to the entry's chain side
-                    files[b] = {
-                        "base": cur["base"],
-                        "deltas": list(cur.get("deltas") or []) + [new],
-                    }
-                else:
-                    prev_chain = _chain(cur) if cur is not None else []
-                    files[b] = prev_chain + [new]
+                cur = files.get(b, {"base": [], "deltas": []})
+                files[b] = {
+                    "base": cur["base"],
+                    "deltas": cur["deltas"] + [os.path.join(rel, entry)],
+                }
         manifest = {
             "version": version,
             "parent": prev["version"],
@@ -984,8 +974,8 @@ class SnapshotTable:
         return out
 
     def _publish(self, version: int, manifest: dict, metrics: dict) -> dict:
-        """Shard + publish. ``manifest["files"]`` arrives RESOLVED (inline
-        entries); on disk each bucket stores a pointer into an immutable
+        """Shard + publish. ``manifest["files"]`` arrives RESOLVED (bucket
+        -> entry); on disk each bucket stores a pointer into an immutable
         content-addressed shard file. An entry object that came out of a
         resolved manifest hits the identity memo and carries its pointer
         with ZERO serialization work — so an untouched bucket costs one
@@ -1022,13 +1012,17 @@ class SnapshotTable:
             raw_files[b] = {"ptr": ptr}
         metrics["manifest_shards_written"] = n_new
         metrics["manifest_shards_carried"] = n_carried
-        raw = dict(manifest, files=raw_files)
-        top_payload = json.dumps(raw, indent=1)
-        metrics["manifest_bytes_written"] = shard_bytes + len(top_payload)
-        # metrics may be embedded in the manifest (commit paths pass the
-        # same dict) — re-serialize so the committed copy carries the
-        # final counters
-        top_payload = json.dumps(raw, indent=1)
+        # every commit path embeds this metrics dict in the manifest, so
+        # the byte count is part of the payload it counts: serialize once
+        # with a one-digit placeholder, then patch in the fixed point
+        # (bytes without the placeholder + the count's own digits)
+        metrics["manifest_bytes_written"] = 0
+        top_payload = json.dumps(dict(manifest, files=raw_files), indent=1)
+        n = shard_bytes + len(top_payload) - 1
+        n += len(str(n + len(str(n))))
+        metrics["manifest_bytes_written"] = n
+        top_payload = top_payload.replace(
+            '"manifest_bytes_written": 0', f'"manifest_bytes_written": {n}', 1)
         mpath = os.path.join(self.root, "manifests", f"v{version}.json")
         # exclusive: a concurrent writer that prepared against the same
         # parent (continuous ingest racing a background compact/rebucket)
@@ -1068,15 +1062,13 @@ class SnapshotTable:
         for v in keep_versions:
             p = os.path.join(self.root, "manifests", f"v{v}.json")
             if os.path.exists(p):
-                with open(p) as f:
-                    m = json.load(f)
-                for raw in m["files"].values():
-                    if isinstance(raw, dict) and "ptr" in raw:
-                        live_shards.add(os.path.basename(raw["ptr"]))
+                m = self._raw_manifest(v)
                 for entry in self._resolve_files(m["files"]).values():
                     for rel in _chain(entry):
-                        # a bucket dir lives under data/v{K}/; keep that version dir
+                        # a data path lives under data/v{K}/; keep that version dir
                         live.add(rel.split("/")[1])
+                live_shards.update(
+                    os.path.basename(raw["ptr"]) for raw in m["files"].values())
         removed = []
         data_root = os.path.join(self.root, "data")
         for entry in sorted(os.listdir(data_root)):

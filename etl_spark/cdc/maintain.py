@@ -21,23 +21,28 @@ import time
 from pyspark.sql import SparkSession
 
 from .dedup import bucket_expr
-from .lake import SnapshotTable, _chain, _entry_parts, scan_written_footers
+from .lake import (
+    SnapshotTable,
+    _chain,
+    _entry_parts,
+    build_file_blooms,
+    scan_written_footers,
+)
 
 
 def _n_files(root: str, rel: str) -> int:
-    """Parquet file count behind one manifest path (a file ref counts as
-    itself; a dir is listed)."""
+    """Parquet file count behind one manifest path (a base file ref
+    counts as itself; a delta dir is listed)."""
     p = os.path.join(root, rel)
     if rel.endswith(".parquet"):
         return 1
     return sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
 
 
-def _chain_len(entry) -> int:
-    """Merge-on-read chain length of a manifest entry: 0 for a plain
-    CoW bucket (str dir or file-level base with no deltas), else
-    1 head + the delta count — the read-amplification bound the
-    compaction policy budgets against."""
+def _chain_len(entry: dict) -> int:
+    """Merge-on-read chain length of a bucket entry: 0 for a plain
+    bucket (no deltas), else 1 head + the remaining delta count — the
+    read-amplification bound the compaction policy budgets against."""
     _, heads, tails = _entry_parts(entry)
     return (1 if heads else 0) + len(tails)
 
@@ -197,20 +202,13 @@ def compact(
         w = w.option("maxRecordsPerFile", int(target_file_rows))
     w.partitionBy("_bucket").parquet(out_dir)
     harvest = scan_written_footers(table.root, out_dir)
-    if os.environ.get("ETL_SPARK_FILELEVEL", "2") == "2":
-        # compaction lays out the key-contiguous file groups future
-        # merges prune against; stamp their membership blooms here so
-        # insert-fanout exoneration is metadata-only from the first
-        # post-compaction batch (multi-file buckets only — a single-file
-        # bucket IS its file, a bloom can't save it a rewrite)
-        from .lake import build_file_blooms
-
-        eligible = {b for b, v in harvest.items() if len(v["files"]) >= 2}
-        build_file_blooms(spark, table.root, harvest, eligible=eligible)
-    entries = {
-        b: {"base": v["files"], "deltas": []}
-        for b, v in harvest.items() if v["files"]
-    }
+    # compaction lays out the key-contiguous file groups future merges
+    # prune against; stamp their membership blooms here so insert-fanout
+    # exoneration is metadata-only from the first post-compaction batch
+    # (multi-file buckets only — a single-file bucket IS its file, a
+    # bloom can't save it a rewrite)
+    eligible = {b for b, v in harvest.items() if len(v["files"]) >= 2}
+    build_file_blooms(spark, table.root, harvest, eligible=eligible)
     metrics["files_written"] = sum(len(v["files"]) for v in harvest.values())
     metrics["bytes_written"] = sum(v["bytes"] for v in harvest.values())
     metrics["wall_secs"] = round(time.time() - t0, 3)
@@ -221,7 +219,7 @@ def compact(
         int(manifest["last_lsn"]),
         [tuple(c) for c in manifest["dyn_schema"]],
         metrics,
-        bucket_entries=entries,
+        bucket_refs={b: v["files"] for b, v in harvest.items()},
     )
     metrics["version"] = version
     return metrics

@@ -67,7 +67,12 @@ from .evolve import (
     remap_extra_keys,
     requires_rewrite,
 )
-from .lake import TOMBSTONE_COL, SnapshotTable, scan_written_footers
+from .lake import (
+    TOMBSTONE_COL,
+    SnapshotTable,
+    build_file_blooms,
+    scan_written_footers,
+)
 from .metrics import BatchMetrics
 from .policies import BASE_EVENT_VALUE_COLS, NO_POLICIES, SEEN_COLS, MergePolicies
 from .schema import KEY_COLS
@@ -874,38 +879,33 @@ def _merge_and_commit(
     # merges prune against (file-level CoW).
     t_phase = time.time()
     harvest = scan_written_footers(table.root, out_dir)
-    if os.environ.get("ETL_SPARK_FILELEVEL", "2") == "2":
-        # write-time key-membership blooms (one narrow pass over the
-        # files just written, O(batch output)) so the NEXT merges'
-        # insert-fanout pruning is metadata-only — lake.build_file_blooms.
-        # Only multi-file buckets (counting carried cold refs): with one
-        # file per bucket the file IS the bucket and a bloom buys
-        # nothing, so whole-bucket-rewrite workloads pay zero here.
-        from .lake import build_file_blooms
-
-        eligible = {
-            b for b, v in harvest.items()
-            if len(v["files"]) + len(cold_refs.get(b, [])) >= 2
-        }
-        t_bloom = time.time()
-        build_file_blooms(spark, table.root, harvest, eligible=eligible)
-        # own phase key: this is the one Spark job in the metadata
-        # phases (O(batch output) key-column pass), and folding it into
-        # the lineage wall hid it in the bench phase tables
-        m.phase_secs["bloom_build"] = round(time.time() - t_bloom, 3)
+    # write-time key-membership blooms (one narrow pass over the files
+    # just written, O(batch output)) so the NEXT merges' insert-fanout
+    # pruning is metadata-only — lake.build_file_blooms. Only multi-file
+    # buckets (counting carried cold refs): with one file per bucket the
+    # file IS the bucket and a bloom buys nothing, so whole-bucket-
+    # rewrite workloads pay zero here.
+    eligible = {
+        b for b, v in harvest.items()
+        if len(v["files"]) + len(cold_refs.get(b, [])) >= 2
+    }
+    t_bloom = time.time()
+    build_file_blooms(spark, table.root, harvest, eligible=eligible)
+    # own phase key: this is the one Spark job in the metadata phases
+    # (O(batch output) key-column pass), and folding it into the lineage
+    # wall hid it in the bench phase tables
+    m.phase_secs["bloom_build"] = round(time.time() - t_bloom, 3)
     m.lineage = _lineage_from_harvest(harvest)
     m.files_rewritten = sum(len(v["files"]) for v in harvest.values())
     m.files_carried = int(split_stats.get("files_cold") or 0)
     m.rows_carried_ref = int(split_stats.get("rows_cold") or 0)
     m.bytes_written = sum(v["bytes"] for v in harvest.values())
-    # new manifest value per touched bucket: carried COLD refs + the
-    # files just written (a bucket with neither drops from the manifest)
-    entries: dict = {}
-    for b in {str(x) for x in touched} | set(harvest):
-        base = list(cold_refs.get(b, []))
-        if b in harvest:
-            base += harvest[b]["files"]
-        entries[b] = {"base": base, "deltas": []} if base else None
+    # new base refs per touched bucket: carried COLD refs + the files
+    # just written (a bucket with neither drops from the manifest)
+    refs = {
+        b: cold_refs.get(b, []) + (harvest[b]["files"] if b in harvest else [])
+        for b in {str(x) for x in touched} | set(harvest)
+    }
     m.phase_secs["lineage"] = round(
         time.time() - t_phase - m.phase_secs.get("bloom_build", 0.0), 3)
     t_phase = time.time()
@@ -918,7 +918,7 @@ def _merge_and_commit(
         dyn_final,
         m.to_dict(),
         full_rewrite=full_rewrite,
-        bucket_entries=entries,
+        bucket_refs=refs,
     )
     m.manifest_bytes = int(
         committed["metrics"].get("manifest_bytes_written") or 0)

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -251,15 +250,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="per-bucket compaction policy: after each batch, "
                          "fold only buckets whose delta chain exceeds N dirs "
                          "(hot buckets compact often, cold ones never)")
-    ap.add_argument("--file-pruning", choices=["off", "range", "member"],
-                    default=None,
-                    help="CoW file-level pruning: member (default) prunes "
-                         "on per-file key ranges AND write-time key-"
-                         "membership blooms (both metadata-only; blooms "
-                         "are built by a narrow O(batch) pass after each "
-                         "write); range skips only on key ranges and "
-                         "builds no blooms; off rewrites touched buckets "
-                         "whole")
     ap.add_argument("--no-pipeline", action="store_true",
                     help="disable the prepare(b+1)-under-write(b) pipeline "
                          "(debugging; the default overlaps batches)")
@@ -279,14 +269,6 @@ def main(argv: list[str] | None = None) -> None:
         if pf["null_lsn"]:
             print(json.dumps({"error": "null-lsn rows in log", **pf}))
             sys.exit(2)
-    if args.file_pruning is not None:
-        # the lake reads the knob from the environment so that every
-        # code path (merge, delete, scd2) sees one consistent setting;
-        # set BEFORE the warmup so the JIT warms the same pruning code
-        # path the measured replay runs
-        os.environ["ETL_SPARK_FILELEVEL"] = (
-            {"off": "0", "range": "1", "member": "2"}[args.file_pruning]
-        )
     if args.warmup:
         import tempfile
 

@@ -43,8 +43,7 @@ from pyspark.sql import types as T
 
 from ..functions.udfs import lang_norm_expr
 from .dedup import bucket_expr, dedup_last_writer
-from .lake import SnapshotTable
-from .lake import scan_written_footers
+from .lake import SnapshotTable, scan_written_footers
 from .merge import BROADCAST_MAX_ROWS, _lineage_from_harvest, prepare_batch
 from .metrics import BatchMetrics
 from .schema import KEY_COLS
@@ -155,10 +154,12 @@ def _apply(spark, table, prep, slim, touched, m, t0):
     m.winners = prep.n_keys
     m.conflicts_resolved = m.data_events - m.winners
     m.buckets_touched = len(touched)
-    m.lineage = _lineage_from_harvest(scan_written_footers(table.root, out_dir))
+    harvest = scan_written_footers(table.root, out_dir)
+    m.lineage = _lineage_from_harvest(harvest)
     m.rows_out = sum(int(v["rows"]) for v in m.lineage.values())
     table.commit(
-        version, out_dir, touched, max(prep.ckpt, prep.lsn_to), [], m.to_dict()
+        version, out_dir, touched, max(prep.ckpt, prep.lsn_to), [], m.to_dict(),
+        bucket_refs={b: v["files"] for b, v in harvest.items()},
     )
     m.wall_secs = time.time() - t0
     return m

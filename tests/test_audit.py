@@ -35,6 +35,19 @@ def test_audit_detects_checkpoint_violation(spark, tmp_path):
     assert not res["checks"]["checkpoint_bound"]["ok"]
 
 
+def test_audit_detects_non_canonical_manifest_entry(spark, tmp_path):
+    t = _mk(spark, tmp_path / "lake")
+    v = t.version()
+    mp = os.path.join(t.root, "manifests", f"v{v}.json")
+    m = json.load(open(mp))
+    b = sorted(m["files"])[0]
+    m["files"][b] = f"data/v{v}/_bucket={b}"  # pre-single-shape dir form
+    json.dump(m, open(mp, "w"))
+    res = audit_table(spark, t)
+    assert not res["ok"]
+    assert list(res["checks"]["manifest_shape"]["bad"]) == [b], res
+
+
 def test_audit_detects_missing_bucket_dir(spark, tmp_path):
     import shutil
 

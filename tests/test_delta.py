@@ -261,6 +261,42 @@ def test_delta_changelog_matches_cow(spark, log, cow, tmp_path):
     ) == want
 
 
+def test_delta_born_buckets_match_cow(spark, tmp_path):
+    """A delta replay into an EMPTY table gives buckets with no base: the
+    first delta dir is the chain head (it may hold tombstones — here a
+    delete of a key that never existed). State, change feed and the
+    post-compaction state equal the CoW replay of the same log."""
+    from etl_spark.cdc.changelog import read_changelog
+
+    rows = [
+        (1, "I", "r1", "a", "c1", "py", "A1", "2024-01-01 00:00:00", None, None),
+        (2, "D", "r1", "ghost", None, None, None, "2024-01-01 00:00:00", None, None),
+        (3, "I", "r1", "b", "c3", "py", "B1", "2024-01-02 00:00:00", None, None),
+        (4, "U", "r1", "a", "c4", "py", "A2", "2024-01-02 00:00:00", None, None),
+        (5, "I", "r2", "c", "c5", "py", "C1", "2024-01-03 00:00:00", None, None),
+        (6, "D", "r1", "b", None, None, None, "2024-01-03 00:00:00", None, None),
+        (7, "D", "r9", "never", None, None, None, "2024-01-04 00:00:00", None, None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "lsn long, op string, repo string, path string, commit string, "
+        "lang string, content string, ts string, extra map<string,string>, "
+        "schema_change struct<kind:string,column:string,new_name:string,new_type:string>",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    cow_t = SnapshotTable(spark, str(tmp_path / "cow"), n_buckets=2)
+    replay(spark, df, cow_t, batch_size=2)
+    t = SnapshotTable(spark, str(tmp_path / "born"), n_buckets=2)
+    replay(spark, df, t, batch_size=2, write_mode="delta")
+    entries = list(t.manifest()["files"].values())
+    assert entries and all(e["base"] == [] and e["deltas"] for e in entries)
+    assert _state(t) == _state(cow_t)
+    assert _feed_set(read_changelog(t, 0)) == _feed_set(read_changelog(cow_t, 0))
+    compact(spark, t)
+    assert chained_buckets(t) == []
+    assert _state(t) == _state(cow_t)
+    assert audit_table(spark, t)["ok"]
+
+
 def test_delta_changelog_delete_reinsert_and_compaction(spark, tmp_path):
     """Tombstone winners classify as absence: delete emits the chain
     prefix's pre-image, re-insert after a tombstone is an insert (not an

@@ -166,12 +166,12 @@ def test_filelevel_changelog_and_second_merge(spark, tmp_path):
     assert res["ok"], res
 
 
-def test_membership_probe_carries_insert_fanout(spark, tmp_path, monkeypatch):
-    """ETL_SPARK_FILELEVEL=2: a pure-INSERT batch whose new keys land
-    INSIDE existing files' (repo,path) ranges range-hits those files but
-    matches no row in them — the key-membership stage exonerates the
-    files (carried by reference; inserts land in the commit's new file),
-    where the default range probe would rewrite every range-hit file.
+def test_membership_probe_carries_insert_fanout(spark, tmp_path):
+    """A pure-INSERT batch whose new keys land INSIDE existing files'
+    (repo,path) ranges range-hits those files but matches no row in
+    them — the key-membership stage exonerates the files (carried by
+    reference; inserts land in the commit's new file), where a
+    range-only probe would rewrite every range-hit file.
     State stays sequential-replay-exact and the audit holds."""
     n = 800
     base = _events(
@@ -202,7 +202,6 @@ def test_membership_probe_carries_insert_fanout(spark, tmp_path, monkeypatch):
         ],
     )
 
-    monkeypatch.setenv("ETL_SPARK_FILELEVEL", "2")
     ms = replay(spark, ins, t, batch_size=10)
     m = ms[0]
     # every pre-existing file exonerated: carried, not rewritten
@@ -276,7 +275,6 @@ def test_bloom_false_positive_only_costs_a_rewrite(spark, tmp_path,
         lake_mod, "_bloom_words",
         lambda ref: (1024, [-1] * (1024 // 64)),  # every probe bit set
     )
-    monkeypatch.setenv("ETL_SPARK_FILELEVEL", "2")
     ms = replay(spark, ins, t, batch_size=10)
     # all-range-hit files look like members now -> rewritten, not carried
     assert ms[0].files_carried < m_files, ms[0].to_dict()
@@ -298,10 +296,43 @@ def test_missing_bloom_fails_closed(spark, tmp_path, monkeypatch):
     m_files = len(refs0)
     assert all(len(r) >= 7 for r in refs0), "compact stamped blooms"
     monkeypatch.setattr(lake_mod, "_bloom_words", lambda ref: None)
-    monkeypatch.setenv("ETL_SPARK_FILELEVEL", "2")
     ms = replay(spark, ins, t, batch_size=10)
     # darts hit >=1 distinct files' ranges; those rewrite (no carry)
     assert 0 < ms[0].files_carried < m_files, ms[0].to_dict()
     assert _state(t) == want
     res = audit_table(spark, t)
     assert res["ok"], res
+
+
+def test_bloom_build_skips_buckets_with_no_bloomable_ref(spark, tmp_path,
+                                                        monkeypatch):
+    """A bucket whose every ref is over BLOOM_MAX_ROWS gets no bloom, so
+    its dir must not be scanned by the build pass either; the other
+    bucket's refs still get theirs."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import etl_spark.cdc.lake as lake_mod
+
+    out = str(tmp_path / "data" / "v1")
+    (spark.range(60)
+     .select(F.lit("r").alias("repo"),
+             F.format_string("p%03d", "id").alias("path"),
+             F.when(F.col("id") < 5, 0).otherwise(1).alias("_bucket"))
+     .coalesce(1)
+     .write.partitionBy("_bucket").parquet(out))
+    harvest = lake_mod.scan_written_footers(str(tmp_path), out)
+    assert {b: sum(r[1] for r in v["files"]) for b, v in harvest.items()} == {
+        "0": 5, "1": 55}
+    monkeypatch.setattr(lake_mod, "BLOOM_MAX_ROWS", 10)
+    scanned: list = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        scanned.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    lake_mod.build_file_blooms(spark, str(tmp_path), harvest)
+    assert scanned == [os.path.join(str(tmp_path), harvest["0"]["dir"])]
+    assert all(len(r) == 7 for r in harvest["0"]["files"])
+    assert all(len(r) == 6 for r in harvest["1"]["files"])

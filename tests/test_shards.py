@@ -14,17 +14,24 @@ the per-version manifest stores one pointer per bucket. Pinned here:
   rest; an expired version's read raises SnapshotExpiredError while the
   live snapshot stays intact;
 - per-batch commit-metadata bytes are visible in the metrics
-  (manifest_bytes / manifest_shards_carried) — the evidence line the
-  append/skewed benches report.
+  (manifest_bytes / manifest_shards_carried) and count exactly the
+  bytes the commit wrote — the evidence line the benches report;
+- every commit kind stores one entry shape, ``{"base": [6- or
+  7-element file refs], "deltas": [dirs]}``, behind a shard pointer,
+  and any other stored shape raises ValueError naming the bucket.
 """
 
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_spark.cdc.delete import delete_where
 from etl_spark.cdc.lake import SnapshotTable, SnapshotExpiredError
+from etl_spark.cdc.maintain import compact, rebucket
 from etl_spark.cdc.runner import replay
+from etl_spark.cdc.scd2 import replay_scd2, scd2_table
 
 EVENTS_DDL = (
     "lsn long, op string, repo string, path string, commit string, "
@@ -105,10 +112,19 @@ def test_untouched_bucket_shard_carried_byte_identical(spark, tmp_path):
         assert (st.st_ino, st.st_mtime_ns) == (
             stats_before[b].st_ino, stats_before[b].st_mtime_ns
         ), f"untouched bucket {b}'s shard was rewritten"
-    # the metrics carry the commit-metadata accounting
+    # the metrics carry the commit-metadata accounting: exactly the
+    # bytes of the one new shard plus the top manifest, whose embedded
+    # copy of the counter holds the same value
     m = ms[0]
     assert m.manifest_shards_carried >= len(raw1["files"]) - 1, m.to_dict()
     assert 0 < m.manifest_bytes < 64_000, m.to_dict()
+    (b,) = changed
+    assert m.manifest_bytes == (
+        os.path.getsize(os.path.join(t.root, "manifests", f"v{v2}.json"))
+        + os.path.getsize(
+            os.path.join(t.root, "manifests", raw2["files"][b]["ptr"]))
+    ), m.to_dict()
+    assert raw2["metrics"]["manifest_bytes_written"] == m.manifest_bytes
 
 
 def test_rollback_writes_no_new_shards(spark, tmp_path):
@@ -181,3 +197,126 @@ def test_fresh_handle_carries_shards_across_processes(spark, tmp_path):
     ]
     assert len(same) == len(raw1["files"]) - 1
     assert ms[0].manifest_shards_carried >= len(same), ms[0].to_dict()
+
+
+def _rows(t):
+    return sorted(tuple(r) for r in t.read().collect())
+
+
+def _assert_one_entry_shape(t):
+    """Every committed manifest stores shard pointers only, and every
+    shard is a {"base", "deltas"} dict of 6- or 7-element file refs."""
+    mdir = os.path.join(t.root, "manifests")
+    for name in os.listdir(mdir):
+        if name.endswith(".json"):
+            with open(os.path.join(mdir, name)) as f:
+                files = json.load(f)["files"]
+            assert all(list(e) == ["ptr"] for e in files.values()), files
+    refs = []
+    for name in _shard_files(t):
+        with open(os.path.join(mdir, "shards", name)) as f:
+            e = json.load(f)
+        assert sorted(e) == ["base", "deltas"], e
+        assert all(len(r) in (6, 7) for r in e["base"]), e
+        assert all(r[0].endswith(".parquet") for r in e["base"]), e
+        assert all(isinstance(d, str) for d in e["deltas"]), e
+        refs.extend(e["base"])
+    return refs
+
+
+def _later(spark, n, *rows):
+    return _events(spark, [
+        (n + i + 1, op, "r", path, "cx", "py", f"v{i}",
+         "2024-01-02 00:00:00", None, None)
+        for i, (op, path) in enumerate(rows)
+    ])
+
+
+def _cow_merge(spark, t, n):
+    replay(spark, _later(spark, n, ("U", "p000"), ("D", "p001"),
+                         ("I", "p999")), t, batch_size=10)
+
+
+def _delta(spark, t, n):
+    replay(spark, _later(spark, n, ("U", "p000"), ("D", "p001")), t,
+           batch_size=10, write_mode="delta")
+
+
+def _compact(spark, t, n):
+    compact(spark, t, max_files_per_bucket=0, target_file_rows=20)
+
+
+def _delete(spark, t, n):
+    delete_where(spark, t, "path < 'p050'")
+
+
+def _scd2(spark, t, n):
+    replay_scd2(spark, _later(spark, n, ("U", "p000"), ("D", "p001")), t,
+                batch_size=10)
+
+
+def _rebucket(spark, t, n):
+    rebucket(spark, t, 3)
+
+
+def _rollback(spark, t, n):
+    _cow_merge(spark, t, n)
+    t.rollback(1)
+
+
+def _schema_fast_forward(spark, t, n):
+    # a log re-based far above the checkpoint whose only event adds a
+    # column: a fast-forward commit, then a metadata-only schema commit
+    replay(spark, _events(spark, [
+        (n + 1000, "S", None, None, None, None, None, "2024-01-02 00:00:00",
+         None, ("add", "stars", None, "int"))]), t, batch_size=10)
+
+
+@pytest.mark.parametrize("kind", [
+    _cow_merge, _delta, _compact, _delete, _scd2, _rebucket, _rollback,
+    _schema_fast_forward,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_every_commit_kind_stores_one_entry_shape(spark, tmp_path, kind):
+    """Each commit kind writes only {"base", "deltas"} entries behind
+    shard pointers, and a fresh handle (cold shard cache) reads back
+    exactly what the writer's handle reads."""
+    if kind is _scd2:
+        t = scd2_table(spark, str(tmp_path / "lake"), n_buckets=4)
+        n = 200
+        replay_scd2(spark, _later(spark, 0, *[("I", f"p{i:03d}")
+                                              for i in range(n)]),
+                    t, batch_size=n)
+    else:
+        t, n = _mk(spark, tmp_path / "lake")
+    v0 = t.version()
+    kind(spark, t, n)
+    assert t.version() > v0
+    refs = _assert_one_entry_shape(t)
+    if kind is _compact:
+        assert any(len(r) == 7 for r in refs), "compaction stamps blooms"
+    fresh = SnapshotTable(spark, t.root, base_fields=t.base_fields)
+    assert _rows(fresh) == _rows(t)
+
+
+def test_non_canonical_entry_raises_naming_the_bucket(spark, tmp_path):
+    """A bucket stored in a pre-single-shape form — a bare dir string,
+    either inside a shard or inline in the top manifest — raises a
+    ValueError naming the bucket instead of being misread."""
+    t, _ = _mk(spark, tmp_path / "lake")
+    v = t.version()
+    mp = os.path.join(t.root, "manifests", f"v{v}.json")
+    raw = _raw_manifest(t, v)
+    bucket = sorted(raw["files"])[0]
+    old_form = f"data/v{v}/_bucket={bucket}"
+    with open(os.path.join(t.root, "manifests", "shards", "old.json"), "w") as f:
+        json.dump(old_form, f)
+    raw["files"][bucket] = {"ptr": "shards/old.json"}
+    with open(mp, "w") as f:
+        json.dump(raw, f)
+    with pytest.raises(ValueError, match=f"bucket {bucket}: shard"):
+        SnapshotTable(spark, t.root).read()
+    raw["files"][bucket] = old_form
+    with open(mp, "w") as f:
+        json.dump(raw, f)
+    with pytest.raises(ValueError, match=f"bucket {bucket}: manifest stores"):
+        SnapshotTable(spark, t.root).read()
