@@ -1,4 +1,4 @@
-"""Per-key last-writer-wins dedup + salted (repo,path) bucketing.
+"""Per-key last-writer-wins dedup + hashed (repo,path) bucketing.
 
 Reference semantics: ``resolve_doubles`` at
 host_available_info_from_hive_to_dwh/main.py:66-120 — an O(n^2)
@@ -14,9 +14,6 @@ than a window:
   with zero extra shuffles. A window (`row_number over partitionBy`)
   would instead shuffle and sort EVERY event of the hot key into one
   task — the straggler we must avoid.
-- ``salted=True`` makes the two phases explicit (groupBy(key, salt)
-  then groupBy(key)); kept for the skew test matrix and for engines
-  without partial max_by.
 
 Bucketing: ``bucket = pmod(xxhash64(repo, path), n_buckets)`` is the
 engine's partition spec for the lake table (north_rule "salted
@@ -44,8 +41,6 @@ def dedup_last_writer(
     events: DataFrame,
     key_cols: list[str] | None = None,
     order_col: str = "lsn",
-    salted: bool = False,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Keep, per key, the row with the max ``order_col``.
 
@@ -55,19 +50,11 @@ def dedup_last_writer(
     key_cols = key_cols or ["repo", "path"]
     cols = events.columns
     row = F.struct(*[F.col(c) for c in cols])
-    if salted:
-        salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(n_salts))
-        p1 = (
-            events.withColumn("_salt", salt)
-            .groupBy(*key_cols, "_salt")
-            .agg(F.max_by(row, F.col(order_col)).alias("_r"))
-        )
-        p2 = p1.groupBy(*key_cols).agg(
-            F.max_by(F.col("_r"), F.col(f"_r.{order_col}")).alias("_r")
-        )
-    else:
-        p2 = events.groupBy(*key_cols).agg(F.max_by(row, F.col(order_col)).alias("_r"))
-    return p2.select("_r.*")
+    return (
+        events.groupBy(*key_cols)
+        .agg(F.max_by(row, F.col(order_col)).alias("_r"))
+        .select("_r.*")
+    )
 
 
 def dedup_last_writer_slim(

@@ -416,12 +416,14 @@ class SnapshotTable:
 
         self.key_cols = list(KEY_COLS)
         # shard resolution caches: shard files are immutable and
-        # content-addressed, so both maps are valid for the table's
+        # content-addressed, so an entry is valid for the table's
         # lifetime. _entry_ptr holds a STRONG ref to each resolved entry
         # object so its id() can never be reused by the allocator — the
         # identity hit is what lets a commit carry an untouched bucket's
         # shard as a pointer without re-serializing its (potentially
-        # huge) ref list.
+        # huge) ref list. Each _publish cuts both maps back to the
+        # version it published, so a long-lived driver holds O(live
+        # buckets) entries, not every version's.
         self._shard_cache: dict[str, object] = {}
         self._entry_ptr: dict[int, tuple[object, str]] = {}
         os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
@@ -1034,6 +1036,14 @@ class SnapshotTable:
             os.path.join(self.root, "metrics", f"batch-v{version}.json"),
             json.dumps(metrics, indent=1),
         )
+        # identity carry only ever starts from the current version
+        # (commits build on self.manifest()), so the memo keeps exactly
+        # the entries just published
+        entries = manifest["files"]
+        self._shard_cache = {raw_files[b]["ptr"]: entries[b] for b in raw_files}
+        self._entry_ptr = {
+            id(entries[b]): (entries[b], raw_files[b]["ptr"]) for b in raw_files
+        }
         return manifest
 
     # --- maintenance ----------------------------------------------------------
@@ -1049,17 +1059,20 @@ class SnapshotTable:
     def expire_snapshots(self, keep_last: int = 2) -> list[str]:
         """Drop manifests/data older than the last N versions (reference
         analog: geoinfo retention ``load_id <= max - k``, main.py:482-486).
-        Data dirs still referenced by a kept manifest are preserved."""
+        Data dirs still referenced by a kept manifest are preserved, and
+        nothing above the current version is touched: a ``data/v{N}``
+        dir or ``manifests/v{N}.json`` with N > current belongs to a
+        writer whose commit is in flight."""
         if keep_last < 1:
             # keep_last=0 would compute an empty live set and delete every
             # manifest and data dir while _LATEST still points at the
             # removed version — an unrecoverable table
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         cur = self.version()
-        keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
+        oldest_kept = max(1, cur - keep_last + 1)
         live: set[str] = set()
         live_shards: set[str] = set()
-        for v in keep_versions:
+        for v in range(oldest_kept, cur + 1):
             p = os.path.join(self.root, "manifests", f"v{v}.json")
             if os.path.exists(p):
                 m = self._raw_manifest(v)
@@ -1072,17 +1085,15 @@ class SnapshotTable:
         removed = []
         data_root = os.path.join(self.root, "data")
         for entry in sorted(os.listdir(data_root)):
-            if entry.startswith("v") and entry not in live:
-                v_num = int(entry[1:])
-                if v_num not in keep_versions and f"v{v_num}" not in live:
-                    shutil.rmtree(os.path.join(data_root, entry))
-                    removed.append(entry)
+            if (entry.startswith("v") and entry not in live
+                    and int(entry[1:]) < oldest_kept):
+                shutil.rmtree(os.path.join(data_root, entry))
+                removed.append(entry)
         manifests_dir = os.path.join(self.root, "manifests")
         for entry in sorted(os.listdir(manifests_dir)):
             if not entry.endswith(".json"):
                 continue  # the shards/ subdir, handled below
-            v_num = int(entry[1:].split(".")[0])
-            if v_num not in keep_versions:
+            if int(entry[1:].split(".")[0]) < oldest_kept:
                 os.remove(os.path.join(manifests_dir, entry))
         # shard GC: content-addressed shards referenced by no kept
         # manifest (expired versions' entries, or orphans of a writer

@@ -1,4 +1,4 @@
-"""Copy-on-write MERGE of one deduped micro-batch into the snapshot table.
+"""MERGE of one deduped micro-batch into the snapshot table.
 
 Reference semantics implemented here (SURVEY.md §2.2):
 - K1 keyed upsert  (replication_otrs_to_dwh/postgresql/upload.py:35-308)
@@ -8,28 +8,36 @@ Reference semantics implemented here (SURVEY.md §2.2):
 - D1 identity-hash invariant  (transform_load.py:176-203) — content_sha256
 - A6 run-metrics counters     (multiple; see metrics.py)
 
-Physical plan — exactly TWO Spark actions per batch, chosen over both
-a full-outer join and a cached-updates design deliberately:
+Every batch runs in two phases. All three apply modes (the CoW merge
+and the merge-on-read delta here, SCD2 history in scd2.py) share the
+second phase's winner pipeline, so the per-row transforms and the
+winner semantics live in one place:
 
-    1. slim conflict-resolution build, two HashAggregate levels:
-       groupBy(key, lsn<<2|op).count -> groupBy(key).agg(max(packed),
-       sum(count), count) — persisted. Level 1 collapses duplicate
-       deliveries with an exact count, so the per-key distinct-lsn
-       cardinality (and from it the exact duplicate-delivery total)
-       falls out of the same pipeline — no count_distinct job, no
-       second scan. The stats probe (key count + distinct buckets +
-       data-row + distinct-lsn counts) is the action that materializes
-       the cache; ALL batch-level control metrics (seen/late/schema
-       events) ride the same single pass as a CollectMetrics
-       observation, so the batch is scanned exactly once, narrow.
-    2. the fused merge+write job:
-         target(touched buckets)  LEFT JOIN  broadcast(slim key->op)
-             -> keep unmatched rows ("carry"), drop matched
-         UNION  winners(content semi-joined on winner lsns; the dedup
-             groupBy is SKIPPED when step 1 proved the batch
-             duplicate-free), repartitioned by _bucket
-         -> write partitionBy(_bucket)                     -- CoW dirs
-    Then (driver-side, no job) per-bucket lineage from parquet footers.
+    1. prepare_batch (reads only the log slice, so the replay loop runs
+       it one batch ahead, under the previous batch's write):
+       - slim conflict resolution: ONE groupBy(key) HashAggregate of
+         max(lsn<<2|op) over a column-pruned scan -> (key, winning lsn,
+         final op), persisted. The batch control counts and schema
+         events ride the same scan as a CollectMetrics observation.
+       - an exact duplicate-delivery probe over 16-byte (packed lsn,
+         key hash) rows, run on a second thread concurrently with the
+         stats probe that materializes the slim cache.
+    2. apply, against the exact checkpoint the batch was prepared for:
+       - winner rows (_winner_updates): the batch scan semi-joined on
+         the slim winner lsns, with the full-content dedup only when the
+         probe found duplicate deliveries, projected to the table's row
+         shape with the sha256 / lang transforms (_project_updates);
+       - CoW: target(touched buckets, pruned to the files a batch key can
+         hit) LEFT JOIN broadcast(slim key->op), keep unmatched rows,
+         UNION the non-delete winners repartitioned by _bucket, ONE
+         write partitionBy(_bucket); delta: the winners alone (deletes
+         as tombstone rows), one write;
+       - driver-side footer harvest (lineage, file refs), write-time
+         key blooms for multi-file CoW buckets, then the manifest commit.
+
+Spark counts more jobs than actions here (AQE query stages and broadcast
+builds run as jobs of their own): a traced 3-batch microbatch_cow replay
+(cdcbench) counts 12 jobs in prepare_batch and 20 in apply_prepared.
 
 Why this shape:
 - Spark cannot broadcast either side of a FULL OUTER join, so the naive
@@ -87,9 +95,9 @@ from .schema import KEY_COLS
 # beyond that the parallel shuffle join wins on any cluster size (and on
 # a 1000-executor cluster the ship cost is multiplied 1000x). Measured on
 # this box at ~1M keys/batch the broadcast still beats the string-key SMJ
-# at every parallelism level (167k vs 110k eps at 8 cores), so the default
-# stays 1M; tune per cluster via ETL_SPARK_BROADCAST_MAX_ROWS.
-BROADCAST_MAX_ROWS = int(os.environ.get("ETL_SPARK_BROADCAST_MAX_ROWS", "1000000"))
+# at every parallelism level (167k vs 110k eps at 8 cores), so the
+# ceiling is 1M.
+BROADCAST_MAX_ROWS = 1_000_000
 
 
 # Event validity — the single source of truth shared by the in-batch
@@ -103,15 +111,6 @@ def event_bad_op_expr():
 
 def event_null_key_expr():
     return (F.col("op") != "S") & (F.col("repo").isNull() | F.col("path").isNull())
-
-
-def _lineage_from_harvest(harvest: dict) -> dict:
-    """Per-bucket (rows, max _last_lsn, dir) lineage from a footer
-    harvest (lake.scan_written_footers) — pure metadata, no Spark job."""
-    return {
-        b: {"rows": v["rows"], "max_lsn": v["max_lsn"], "dir": v["dir"]}
-        for b, v in harvest.items()
-    }
 
 
 def _event_value_expr(col: str):
@@ -294,6 +293,30 @@ class PreparedBatch:
     n_keys: int = 0
     touched: list | None = None
     prepare_secs: float = 0.0
+
+    @property
+    def do_broadcast(self) -> bool:
+        """Whether the slim key set is small enough to broadcast."""
+        return self.n_keys <= BROADCAST_MAX_ROWS
+
+
+def _observed(obs: Observation | None):
+    """The row an Observation collected, or None when there is none to
+    read and the caller must recompute its counters with an explicit
+    aggregate. None covers two cases: no observation was made (the
+    streaming front-end passes ``use_observations=False``, because
+    CollectMetrics does not report reliably under a foreachBatch
+    sub-execution), or Catalyst collapsed the plan to a LocalRelation
+    (tiny createDataFrame batches in tests, control-only batches, a
+    winner branch that folds to empty) and elided the CollectMetrics
+    node, so the observation yields an empty row that cannot cross
+    py4j. The parquet-backed hot path always reports."""
+    if obs is None:
+        return None
+    try:
+        return obs.get or None
+    except Exception:
+        return None
 
 
 def prepare_batch(
@@ -491,21 +514,9 @@ def prepare_batch(
         ).collect()[0]
         dup_row = dup_fut.result()
     m.phase_secs["slim_build"] = round(time.time() - t_phase, 3)
-    counts = None
-    if ctl is not None:
-        # On a plan Catalyst collapsed to a LocalRelation (tiny
-        # createDataFrame batches in tests / control-only batches) the
-        # CollectMetrics node is elided and the observation yields an
-        # empty row that cannot cross py4j — fall back to the explicit
-        # aggregate. The parquet-backed hot path always reports.
-        try:
-            counts = ctl.get or None
-        except Exception:
-            counts = None
+    counts = _observed(ctl)
     if counts is None:
-        # streaming front-end (CollectMetrics does not report reliably
-        # under a foreachBatch sub-execution) or elided-observation
-        # fallback: a narrow (lsn, op, schema_change) scan
+        # a narrow (lsn, op, schema_change) scan
         counts = batch.agg(*control_exprs).collect()[0]
     # unobserved lineage for later actions (re-running a CollectMetrics
     # plan in another action would double-report the observation)
@@ -553,11 +564,30 @@ def prepare_batch(
     )
 
 
+
+
+def _prepared_noop(table: SnapshotTable, prep: PreparedBatch, t0: float) -> bool:
+    """The guard every applier runs first: True (wall stamped) when
+    ``prep`` is a replayed batch's recorded no-op. Raises when it was
+    prepared against a stale checkpoint (never happens in the replay
+    loop, which applies strictly in LSN order) — the slim filters baked
+    ckpt in, so rebuild rather than corrupt."""
+    if prep.noop:
+        prep.m.wall_secs = time.time() - t0
+        return True
+    if table.last_lsn() != prep.ckpt:
+        prep.slim.unpersist()
+        raise ValueError(
+            f"batch {prep.batch_id} prepared at ckpt={prep.ckpt} but table "
+            f"is at {table.last_lsn()}; re-prepare before applying"
+        )
+    return False
+
+
 def apply_prepared(
     spark: SparkSession,
     table: SnapshotTable,
     prep: PreparedBatch,
-    salted_dedup: bool = False,
     use_arrow_udfs: bool = False,
     use_observations: bool = True,
     policies: MergePolicies = NO_POLICIES,
@@ -583,21 +613,9 @@ def apply_prepared(
       back to one CoW commit.
     """
     t0 = time.time()
+    if _prepared_noop(table, prep, t0):
+        return prep.m
     m = prep.m
-    if prep.noop:
-        m.wall_secs = time.time() - t0
-        return m
-    if table.last_lsn() != prep.ckpt:
-        # prepared against a stale checkpoint (never happens in the
-        # replay loop, which pipelines strictly in LSN order) — the slim
-        # filters baked ckpt in, so rebuild rather than corrupt
-        prep.slim.unpersist()
-        raise ValueError(
-            f"batch {prep.batch_id} prepared at ckpt={prep.ckpt} but table "
-            f"is at {table.last_lsn()}; re-prepare before applying"
-        )
-    ckpt, lsn_to = prep.ckpt, prep.lsn_to
-    slim, data, changes = prep.slim, prep.data, prep.changes
     m.phase_secs["prepare"] = round(prep.prepare_secs, 3)
 
     if prep.quarantine is not None:
@@ -609,66 +627,33 @@ def apply_prepared(
             os.path.join(table.root, "quarantine", f"b{prep.batch_id}")
         )
 
-    dyn_prev = table.dyn_schema()
-    dyn_final = apply_to_dyn_schema(dyn_prev, changes)
+    dyn_final = apply_to_dyn_schema(table.dyn_schema(), prep.changes)
     if policies.track_seen:
         have = {n for n, _ in dyn_final}
         dyn_final = dyn_final + [c for c in SEEN_COLS if c[0] not in have]
-    full_rewrite = requires_rewrite(changes)
+    full_rewrite = requires_rewrite(prep.changes)
     m.full_rewrite = full_rewrite
-    manifest_prev = table.manifest()
 
-    n_keys = prep.n_keys
-    touched = prep.touched
-    if full_rewrite:
-        committed = [int(b) for b in manifest_prev["files"]]
-        touched = sorted(set(touched) | set(committed))
-
-    if not touched and not full_rewrite:
-        # schema-only (add) or fully-late batch: metadata-only commit
-        slim.unpersist()
-        table.commit(
-            table.version() + 1, None, [], max(ckpt, lsn_to), dyn_final, m.to_dict()
-        )
-        m.wall_secs = time.time() - t0
-        return m
-
-    if write_mode == "delta" and not full_rewrite:
-        try:
-            return _delta_commit(
-                spark, table, m, slim, data, changes, dyn_final, touched,
-                m.duplicate_deliveries == 0,
-                prep.n_keys <= BROADCAST_MAX_ROWS, ckpt, lsn_to,
-                prep.batch_id, salted_dedup, use_arrow_udfs,
-                use_observations, policies, t0,
-            )
-        finally:
-            slim.unpersist()
-
-    # target side: only touched buckets are read & rewritten (CoW), and
-    # within each bucket only the FILES whose key range can contain a
-    # batch key — the rest carry forward by manifest reference
-    # (file-level CoW, lake.read_for_merge)
-    if full_rewrite:
-        target = table.read()
-        cold_refs, split_stats = {}, {}
-    else:
-        target, cold_refs, split_stats = table.read_for_merge(
-            manifest_prev, touched, slim
-        )
-    target = evolve_table(target, changes, dyn_final)
-
-    do_broadcast = n_keys <= BROADCAST_MAX_ROWS
-    dup_free = m.duplicate_deliveries == 0
     try:
+        if not prep.touched and not full_rewrite:
+            # schema-only (add) or fully-late batch: metadata-only commit
+            table.commit(
+                table.version() + 1, None, [], max(prep.ckpt, prep.lsn_to),
+                dyn_final, m.to_dict(),
+            )
+            m.wall_secs = time.time() - t0
+            return m
+        if write_mode == "delta" and not full_rewrite:
+            return _delta_commit(
+                table, prep, dyn_final, use_arrow_udfs, use_observations,
+                policies, t0,
+            )
         return _merge_and_commit(
-            spark, table, m, slim, data, target, changes, dyn_final, touched,
-            full_rewrite, manifest_prev, do_broadcast, n_keys, ckpt, lsn_to,
-            prep.batch_id, salted_dedup, use_arrow_udfs, use_observations,
-            dup_free, policies, t0, cold_refs, split_stats,
+            spark, table, prep, dyn_final, full_rewrite, use_arrow_udfs,
+            use_observations, policies, t0,
         )
     finally:
-        slim.unpersist()
+        prep.slim.unpersist()
 
 
 def apply_batch(
@@ -678,7 +663,6 @@ def apply_batch(
     batch_id: int,
     lsn_from: int,
     lsn_to: int,
-    salted_dedup: bool = False,
     use_arrow_udfs: bool = False,
     use_observations: bool = True,
     policies: MergePolicies = NO_POLICIES,
@@ -698,25 +682,137 @@ def apply_batch(
     )
     return apply_prepared(
         spark, table, prep,
-        salted_dedup=salted_dedup, use_arrow_udfs=use_arrow_udfs,
-        use_observations=use_observations, policies=policies,
-        write_mode=write_mode,
+        use_arrow_udfs=use_arrow_udfs, use_observations=use_observations,
+        policies=policies, write_mode=write_mode,
     )
 
 
+def _op_count_exprs() -> list:
+    return [
+        F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("n_iu"),
+        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
+    ]
+
+
+def _winner_updates(
+    table: SnapshotTable,
+    prep: PreparedBatch,
+    dyn_final: list[tuple[str, str]],
+    use_arrow_udfs: bool = False,
+    use_observations: bool = True,
+    policies: MergePolicies = NO_POLICIES,
+    target: DataFrame | None = None,
+) -> tuple[DataFrame, Observation | None]:
+    """The winner pipeline every applier shares: each touched key's
+    winning event in the table's row shape, plus ``op`` and ``_bucket``.
+
+    Full-content winners by SEMI-JOIN REDUCTION: lsn is unique, so the
+    slim winners' lsn set (a few MB of longs, broadcast) filters the scan
+    down to winner rows BEFORE any wide shuffle — the ~2KB content column
+    crosses the wire once, and only for rows that survive. After the
+    semi-filter the only possible multiplicity is a duplicate delivery of
+    a winner lsn itself, so the dedup groupBy (a FULL shuffle of winner
+    content) runs only when the prepare-phase probe found duplicates.
+
+    ``target`` (the touched buckets' current rows) is read only by
+    active column ``policies``. Returns the rows and an observation of
+    their I/U and D counts (None when not observed); read the counts
+    with ``_op_counts`` after the write.
+    """
+    winner_ids = prep.slim.select("lsn")
+    if prep.do_broadcast:
+        winner_ids = F.broadcast(winner_ids)
+    upd_src = remap_extra_keys(
+        prep.data.join(winner_ids, "lsn", "semi"), prep.changes)
+    winners = (
+        upd_src
+        if prep.m.duplicate_deliveries == 0
+        else dedup_last_writer(upd_src, KEY_COLS, "lsn")
+    )
+    overrides: dict = {}
+    if policies.active:
+        winners, overrides = _apply_policies(
+            winners, prep.slim, prep.data, target, policies, prep.do_broadcast
+        )
+    upd = _project_updates(
+        winners, dyn_final, use_arrow_udfs=use_arrow_udfs, overrides=overrides
+    ).withColumn("_bucket", bucket_expr(table.n_buckets))
+    obs = (
+        Observation(f"ops_b{prep.batch_id}")
+        if (prep.m.data_events and use_observations)
+        else None
+    )
+    if obs is not None:
+        upd = upd.observe(obs, *_op_count_exprs())
+    return upd, obs
+
+
+def _op_counts(obs: Observation | None, prep: PreparedBatch) -> tuple[int, int]:
+    """(I/U winners, D winners) after the write, from the observation or
+    recomputed from the cached slim; sets ``winners`` and
+    ``conflicts_resolved``."""
+    m = prep.m
+    ops = _observed(obs)
+    if ops is None and m.data_events:
+        ops = prep.slim.agg(*_op_count_exprs()).collect()[0].asDict()
+    ops = ops or {}
+    n_iu = int(ops.get("n_iu") or 0)
+    n_d = int(ops.get("n_d") or 0)
+    m.winners = n_iu + n_d
+    m.conflicts_resolved = m.data_events - m.winners
+    return n_iu, n_d
+
+
+def _harvest(table: SnapshotTable, m: BatchMetrics, out_dir: str) -> dict:
+    """Footer harvest of the files a batch just wrote (lake.
+    scan_written_footers: row counts + key/lsn column stats, pure
+    metadata, no Spark job) -> per-bucket lineage and ``bytes_written``."""
+    harvest = scan_written_footers(table.root, out_dir)
+    m.lineage = {
+        b: {"rows": v["rows"], "max_lsn": v["max_lsn"], "dir": v["dir"]}
+        for b, v in harvest.items()
+    }
+    m.bytes_written = sum(v["bytes"] for v in harvest.values())
+    return harvest
+
+
+def _committed(m: BatchMetrics, committed: dict, t_phase: float,
+               t0: float) -> BatchMetrics:
+    """Commit-metadata metrics of a published manifest; closes the
+    ``commit`` phase and the batch wall."""
+    m.manifest_bytes = int(
+        committed["metrics"].get("manifest_bytes_written") or 0)
+    m.manifest_shards_carried = int(
+        committed["metrics"].get("manifest_shards_carried") or 0)
+    m.phase_secs["commit"] = round(time.time() - t_phase, 3)
+    m.wall_secs = time.time() - t0
+    return m
+
+
 def _merge_and_commit(
-    spark, table, m, slim, data, target, changes, dyn_final, touched,
-    full_rewrite, manifest_prev, do_broadcast, n_keys, ckpt, lsn_to,
-    batch_id, salted_dedup, use_arrow_udfs, use_observations, dup_free,
-    policies, t0, cold_refs=None, split_stats=None,
+    spark, table, prep, dyn_final, full_rewrite, use_arrow_udfs,
+    use_observations, policies, t0,
 ):
-    cold_refs = cold_refs or {}
-    split_stats = split_stats or {}
-    bcol = bucket_expr(table.n_buckets)
+    m, slim = prep.m, prep.slim
+    manifest_prev = table.manifest()
+    touched = prep.touched
+    # target side: only touched buckets are read & rewritten (CoW), and
+    # within each bucket only the FILES whose key range can contain a
+    # batch key — the rest carry forward by manifest reference
+    # (file-level CoW, lake.read_for_merge)
+    if full_rewrite:
+        touched = sorted(set(touched) | {int(b) for b in manifest_prev["files"]})
+        target = table.read()
+        cold_refs, split_stats = {}, {}
+    else:
+        target, cold_refs, split_stats = table.read_for_merge(
+            manifest_prev, touched, slim
+        )
+    target = evolve_table(target, prep.changes, dyn_final)
     data_cols = [c for c in target.columns]
 
     slim_keys = slim.select(*KEY_COLS, "op")
-    if do_broadcast:
+    if prep.do_broadcast:
         slim_keys = F.broadcast(slim_keys)
     j = target.join(slim_keys, on=KEY_COLS, how="left")
     # "Known empty" must match what the target read actually resolved: a
@@ -739,57 +835,19 @@ def _merge_and_commit(
     tgt_obs = (
         None
         if (target_known_empty or not use_observations)
-        else Observation(f"merge_b{batch_id}")
+        else Observation(f"merge_b{prep.batch_id}")
     )
+    tgt_counts = [
+        F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
+        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
+        F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
+    ]
     if tgt_obs is not None:
-        j = j.observe(
-            tgt_obs,
-            F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
-        )
-
-    # Full-content winners by SEMI-JOIN REDUCTION: lsn is unique, so the
-    # slim winners' lsn set (a few MB of longs, broadcast) filters the
-    # scan down to winner rows BEFORE any wide shuffle — the 2KB content
-    # column crosses the wire once, and only for rows that survive. The
-    # groupBy after the filter collapses duplicate deliveries of the same
-    # lsn (identical rows) and costs only |winners|, not |batch|.
-    winner_ids = slim.select("lsn")
-    if do_broadcast:
-        winner_ids = F.broadcast(winner_ids)
-    upd_src = remap_extra_keys(data.join(winner_ids, "lsn", "semi"), changes)
-    # lsn is unique per key in slim, so after the semi-filter the only
-    # possible multiplicity is a duplicate delivery of the winner lsn
-    # itself. When the slim pre-aggregate proved the batch duplicate-free
-    # (the overwhelmingly common case), the dedup groupBy — a FULL
-    # shuffle + aggregate of the ~2KB winner content — is skipped
-    # entirely; content then crosses the wire exactly once (the _bucket
-    # repartition before the write).
-    winners = (
-        upd_src
-        if dup_free
-        else dedup_last_writer(upd_src, KEY_COLS, "lsn", salted=salted_dedup)
+        j = j.observe(tgt_obs, *tgt_counts)
+    upd, win_obs = _winner_updates(
+        table, prep, dyn_final, use_arrow_udfs, use_observations, policies,
+        target,
     )
-    overrides: dict = {}
-    if policies.active:
-        winners, overrides = _apply_policies(
-            winners, slim, data, target, policies, do_broadcast
-        )
-    upd = _project_updates(
-        winners, dyn_final, use_arrow_udfs=use_arrow_udfs, overrides=overrides
-    ).withColumn("_bucket", bcol)
-    win_obs = (
-        Observation(f"ops_b{batch_id}")
-        if (m.data_events and use_observations)
-        else None
-    )
-    if win_obs is not None:
-        upd = upd.observe(
-            win_obs,
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("n_iu"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
-        )
 
     # Both union branches arrive at the writer already bucket-aligned:
     # - kept: target files are read per-bucket-dir, so each task holds
@@ -819,48 +877,16 @@ def _merge_and_commit(
     m.phase_secs["merge_write"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
 
-    ops = None
-    if win_obs is not None:
-        # same elided-CollectMetrics guard as the ctl observation: on a
-        # plan Catalyst collapsed (tiny LocalRelation batches whose
-        # winner branch folds to empty) the node vanishes and the
-        # observation row cannot cross py4j — recompute from the cached
-        # slim instead of crashing
-        try:
-            ops = win_obs.get or None
-        except Exception:
-            ops = None
-    if ops is None and m.data_events:
-        r = slim.agg(
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("n_iu"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
-        ).collect()[0]
-        ops = {"n_iu": r["n_iu"], "n_d": r["n_d"]}
-    ops = ops or {}
-    n_iu = int(ops.get("n_iu") or 0)
-    n_d = int(ops.get("n_d") or 0)
-    m.winners = n_iu + n_d
-    m.conflicts_resolved = m.data_events - m.winners
-    tgt = None
-    if tgt_obs is not None:
-        try:
-            tgt = tgt_obs.get or None
-        except Exception:
-            tgt = None
+    n_iu, n_d = _op_counts(win_obs, prep)
+    tgt = _observed(tgt_obs)
     if tgt is None and not target_known_empty:
         # recompute the carry/match split from a column-pruned target
         # scan joined to the (cached, tiny) slim winners
-        r = (
+        tgt = (
             target.select(*KEY_COLS)
-            .join(F.broadcast(slim.select(*KEY_COLS, "op")) if do_broadcast
-                  else slim.select(*KEY_COLS, "op"), on=KEY_COLS, how="left")
-            .agg(
-                F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
-                F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
-            ).collect()[0]
+            .join(slim_keys, on=KEY_COLS, how="left")
+            .agg(*tgt_counts).collect()[0].asDict()
         )
-        tgt = {"carried": r["carried"], "deleted": r["deleted"], "replaced": r["replaced"]}
     tgt = tgt or {}
     m.deleted = int(tgt.get("deleted") or 0)
     replaced = int(tgt.get("replaced") or 0)
@@ -872,13 +898,11 @@ def _merge_and_commit(
     m.phase_secs["post_metrics"] = round(time.time() - t_phase, 3)
 
     # per-partition lineage + per-file key-range refs from the freshly
-    # written CoW files' parquet footers (row counts + repo/path/_last_lsn
-    # column stats) — pure metadata reads on the driver, no extra Spark
-    # job. This is the same stats harvest an Iceberg manifest commit
-    # performs, scoped to the touched buckets; the refs are what future
-    # merges prune against (file-level CoW).
+    # written CoW files' parquet footers. This is the same stats harvest
+    # an Iceberg manifest commit performs, scoped to the touched buckets;
+    # the refs are what future merges prune against (file-level CoW).
     t_phase = time.time()
-    harvest = scan_written_footers(table.root, out_dir)
+    harvest = _harvest(table, m, out_dir)
     # write-time key-membership blooms (one narrow pass over the files
     # just written, O(batch output)) so the NEXT merges' insert-fanout
     # pruning is metadata-only — lake.build_file_blooms. Only multi-file
@@ -895,11 +919,9 @@ def _merge_and_commit(
     # (O(batch output) key-column pass), and folding it into the lineage
     # wall hid it in the bench phase tables
     m.phase_secs["bloom_build"] = round(time.time() - t_bloom, 3)
-    m.lineage = _lineage_from_harvest(harvest)
     m.files_rewritten = sum(len(v["files"]) for v in harvest.values())
     m.files_carried = int(split_stats.get("files_cold") or 0)
     m.rows_carried_ref = int(split_stats.get("rows_cold") or 0)
-    m.bytes_written = sum(v["bytes"] for v in harvest.values())
     # new base refs per touched bucket: carried COLD refs + the files
     # just written (a bucket with neither drops from the manifest)
     refs = {
@@ -909,30 +931,21 @@ def _merge_and_commit(
     m.phase_secs["lineage"] = round(
         time.time() - t_phase - m.phase_secs.get("bloom_build", 0.0), 3)
     t_phase = time.time()
-
     committed = table.commit(
         version,
         out_dir,
         touched,
-        max(ckpt, lsn_to),
+        max(prep.ckpt, prep.lsn_to),
         dyn_final,
         m.to_dict(),
         full_rewrite=full_rewrite,
         bucket_refs=refs,
     )
-    m.manifest_bytes = int(
-        committed["metrics"].get("manifest_bytes_written") or 0)
-    m.manifest_shards_carried = int(
-        committed["metrics"].get("manifest_shards_carried") or 0)
-    m.phase_secs["commit"] = round(time.time() - t_phase, 3)
-    m.wall_secs = time.time() - t0
-    return m
+    return _committed(m, committed, t_phase, t0)
 
 
 def _delta_commit(
-    spark, table, m, slim, data, changes, dyn_final, touched, dup_free,
-    do_broadcast, ckpt, lsn_to, batch_id, salted_dedup, use_arrow_udfs,
-    use_observations, policies, t0,
+    table, prep, dyn_final, use_arrow_udfs, use_observations, policies, t0,
 ):
     """Merge-on-read apply: land ONLY the batch's winner rows as a delta
     dir appended to each touched bucket's chain (lake.commit_delta);
@@ -951,46 +964,19 @@ def _delta_commit(
     The winners == inserted + updated + deleted + delete_noop invariant
     still holds.
     """
-    bcol = bucket_expr(table.n_buckets)
-
-    # winners by SEMI-JOIN REDUCTION, exactly the CoW shape: slim winner
-    # lsns (broadcast when small) filter the scan before anything wide
-    # moves; the full-content dedup shuffle is skipped when the packed
-    # probe proved the batch duplicate-free
-    winner_ids = slim.select("lsn")
-    if do_broadcast:
-        winner_ids = F.broadcast(winner_ids)
-    upd_src = remap_extra_keys(data.join(winner_ids, "lsn", "semi"), changes)
-    winners = (
-        upd_src
-        if dup_free
-        else dedup_last_writer(upd_src, KEY_COLS, "lsn", salted=salted_dedup)
+    m, touched = prep.m, prep.touched
+    # policies are the one case delta mode must read the target: the
+    # coalesce fallback / first_seen floor live in the PREVIOUS row
+    # state. Pruned to the touched buckets' merged view; tables that run
+    # policy-free (the common mirror) never scan the target.
+    target = (
+        evolve_table(table.read(buckets=touched), prep.changes, dyn_final)
+        if policies.active else None
     )
-    overrides: dict = {}
-    if policies.active:
-        # policies are the one case delta mode must read the target: the
-        # coalesce fallback / first_seen floor live in the PREVIOUS row
-        # state. Pruned to the touched buckets' merged view; tables that
-        # run policy-free (the common mirror) never scan the target.
-        target = evolve_table(table.read(buckets=touched), changes, dyn_final)
-        winners, overrides = _apply_policies(
-            winners, slim, data, target, policies, do_broadcast
-        )
-    upd = _project_updates(
-        winners, dyn_final, use_arrow_udfs=use_arrow_udfs, overrides=overrides
-    ).withColumn("_bucket", bcol)
-    win_obs = (
-        Observation(f"delta_ops_b{batch_id}")
-        if (m.data_events and use_observations)
-        else None
+    upd, win_obs = _winner_updates(
+        table, prep, dyn_final, use_arrow_udfs, use_observations, policies,
+        target,
     )
-    if win_obs is not None:
-        upd = upd.observe(
-            win_obs,
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("n_iu"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
-        )
-
     data_cols = [f.name for f in table.base_fields] + [n for n, _ in dyn_final]
     out = (
         upd.select(
@@ -1010,23 +996,7 @@ def _delta_commit(
     m.phase_secs["delta_write"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
 
-    ops = None
-    if win_obs is not None:
-        try:
-            ops = win_obs.get or None
-        except Exception:
-            ops = None
-    if ops is None and m.data_events:
-        r = slim.agg(
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("n_iu"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
-        ).collect()[0]
-        ops = {"n_iu": r["n_iu"], "n_d": r["n_d"]}
-    ops = ops or {}
-    n_iu = int(ops.get("n_iu") or 0)
-    n_d = int(ops.get("n_d") or 0)
-    m.winners = n_iu + n_d
-    m.conflicts_resolved = m.data_events - m.winners
+    n_iu, n_d = _op_counts(win_obs, prep)
     m.inserted = n_iu
     m.updated = 0
     m.deleted = n_d
@@ -1036,17 +1006,9 @@ def _delta_commit(
     m.phase_secs["post_metrics"] = round(time.time() - t_phase, 3)
 
     t_phase = time.time()
-    harvest = scan_written_footers(table.root, out_dir)
-    m.lineage = _lineage_from_harvest(harvest)
-    m.bytes_written = sum(v["bytes"] for v in harvest.values())
+    _harvest(table, m, out_dir)
     m.phase_secs["lineage"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
     committed = table.commit_delta(
-        version, out_dir, max(ckpt, lsn_to), dyn_final, m.to_dict())
-    m.manifest_bytes = int(
-        committed["metrics"].get("manifest_bytes_written") or 0)
-    m.manifest_shards_carried = int(
-        committed["metrics"].get("manifest_shards_carried") or 0)
-    m.phase_secs["commit"] = round(time.time() - t_phase, 3)
-    m.wall_secs = time.time() - t0
-    return m
+        version, out_dir, max(prep.ckpt, prep.lsn_to), dyn_final, m.to_dict())
+    return _committed(m, committed, t_phase, t0)

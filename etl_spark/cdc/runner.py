@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lake import SnapshotTable
-from .merge import apply_batch
 from .metrics import BatchMetrics
 from .policies import NO_POLICIES, MergePolicies
 from .schema import EVENT_SCHEMA
@@ -61,11 +60,9 @@ def replay(
     table: SnapshotTable,
     batch_size: int = 1_000_000,
     max_batches: int | None = None,
-    salted_dedup: bool = False,
     use_arrow_udfs: bool = False,
     log: bool = False,
     policies: MergePolicies = NO_POLICIES,
-    pipelined: bool = True,
     applier=None,
     write_mode: str = "cow",
     compact_every: int | None = None,
@@ -80,22 +77,28 @@ def replay(
     whole table every batch. ``compact_every=K`` folds the delta chains
     back into plain bucket dirs every K batches (and once at the end),
     bounding read-side reconstruction cost; compaction changes neither
-    the checkpoint nor the row set, so it composes with the pipelined
-    prepare (which depends only on the log and the LSN cursor).
+    the checkpoint nor the row set, so it composes with the prepare that
+    runs one batch ahead (which depends only on the log and the LSN
+    cursor).
     ``compact_chain_len=K`` is the per-bucket alternative (Hudi
     max-delta-commits): after each batch, fold ONLY buckets whose chain
     exceeds K dirs — hot buckets compact often, cold buckets never get
     rewritten, and read amplification stays bounded at K everywhere.
 
-    Pipelined: batch windows are fixed LSN ranges, so the checkpoint
-    after batch b is known (= lsn_to(b)) before b commits — the next
-    batch's prepare phase (slim conflict resolution; reads only the log)
-    runs on a background thread CONCURRENTLY with the current batch's
-    merge+write job, filling executor slots the write leaves idle. The
-    commit itself stays strictly sequential, so exactly-once and
-    crash-resume semantics are identical to the serial loop: on restart
-    the cursor re-reads the table checkpoint and any half-prepared batch
-    is simply re-prepared.
+    Every batch after the first is prepared one batch ahead: batch
+    windows are fixed LSN ranges, so the checkpoint after batch b is
+    known (= lsn_to(b)) before b commits, and batch b+1's prepare phase
+    (slim conflict resolution; reads only the log) runs on one
+    background thread CONCURRENTLY with batch b's merge+write job,
+    filling executor slots the write leaves idle. The thread's pool is
+    shut down before ``replay`` returns or raises. Commits stay strictly
+    sequential, so exactly-once and crash-resume semantics are those of
+    a serial loop: on restart the cursor re-reads the table checkpoint
+    and any half-prepared batch is simply re-prepared.
+
+    ``merge.prepare_batch`` and ``merge.apply_prepared`` are looked up
+    on the merge module at call time, so a wrapper installed on them
+    (a tracer, a test spy) sees every batch.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -140,7 +143,7 @@ def replay(
         )
     batch_id = table.version()
     cursor = table.last_lsn()
-    pool = ThreadPoolExecutor(max_workers=1) if pipelined else None
+    pool = ThreadPoolExecutor(max_workers=1)
     try:
         prep = None
         while cursor < hi:
@@ -153,7 +156,7 @@ def replay(
                 )
             nxt = None
             last = (max_batches and len(out) + 1 >= max_batches) or lsn_to >= hi
-            if pool is not None and not last:
+            if not last:
                 nxt_from, nxt_to, nxt_batch = window(lsn_to)
                 nxt = pool.submit(
                     prepare_batch, spark, table, nxt_batch, batch_id + 1,
@@ -162,8 +165,7 @@ def replay(
             try:
                 bm = applier(
                     spark, table, prep,
-                    salted_dedup=salted_dedup, use_arrow_udfs=use_arrow_udfs,
-                    policies=policies,
+                    use_arrow_udfs=use_arrow_udfs, policies=policies,
                 )
             except BaseException:
                 # a failed apply must not leak the concurrently-prepared
@@ -211,8 +213,7 @@ def replay(
                     prep.slim.unpersist()
                 break
     finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
+        pool.shutdown(wait=True)
     return out
 
 
@@ -226,10 +227,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--max-batches", type=int, default=None)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--salted-dedup", action="store_true",
-                    help="explicit two-phase (key,salt)->key dedup; default is "
-                         "groupBy max_by, whose map-side partial aggregation is "
-                         "the same two-phase reduce without the second shuffle")
     ap.add_argument("--arrow-udfs", action="store_true",
                     help="run sha256/lang-norm as Arrow pandas UDFs instead of "
                          "the (faster, equal-output) JVM-native expressions")
@@ -250,9 +247,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="per-bucket compaction policy: after each batch, "
                          "fold only buckets whose delta chain exceeds N dirs "
                          "(hot buckets compact often, cold ones never)")
-    ap.add_argument("--no-pipeline", action="store_true",
-                    help="disable the prepare(b+1)-under-write(b) pipeline "
-                         "(debugging; the default overlaps batches)")
     ap.add_argument("--warmup", action="store_true",
                     help="run a tiny throwaway replay first so the reported "
                          "throughput is steady-state (JIT/codegen warm)")
@@ -290,7 +284,7 @@ def main(argv: list[str] | None = None) -> None:
                generate_events(spark, GenConfig(n_events=500_000, n_keys=60_000)),
                wtab, batch_size=250_000)
     table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets)
-    # wall-clock around the whole loop: with pipelined prepares the
+    # wall-clock around the whole loop: with prepares run ahead the
     # per-batch walls overlap, so summing them would double-count (and
     # miss the first batch's prepare). This is the honest end-to-end
     # number: log-bounds probe + every prepare + every merge + commit.
@@ -304,14 +298,12 @@ def main(argv: list[str] | None = None) -> None:
         table,
         batch_size=args.batch_size,
         max_batches=args.max_batches,
-        salted_dedup=args.salted_dedup,
         use_arrow_udfs=args.arrow_udfs,
         log=True,
         policies=MergePolicies(
             coalesce_cols=tuple(c for c in args.coalesce_cols.split(",") if c),
             track_seen=args.track_seen,
         ),
-        pipelined=not args.no_pipeline,
         write_mode=args.write_mode,
         compact_every=args.compact_every,
         compact_chain_len=args.compact_chain_len,

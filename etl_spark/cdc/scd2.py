@@ -13,7 +13,9 @@ row look like at lsn X?" for. Here:
 
 Apply semantics per micro-batch (batch conflicts collapse to the
 per-key winner first, same slim HashAggregate as the merge —
-``prepare_batch`` is reused unchanged):
+``prepare_batch`` is reused unchanged — and new versions come out of the
+merge's winner pipeline, so history rows get the same sha256 / lang
+transforms):
 - winner I/U on a key with a current row: close it (valid_to = winner
   lsn) AND open a new current row at valid_from = winner lsn;
 - winner I/U on an absent/deleted key: open a new current row;
@@ -28,9 +30,10 @@ and the new-version branch is the winner semi-join. One write action
 per batch; bucketing by (repo, path) keeps a key's whole history
 colocated, so point-in-time lookups stay single-bucket.
 
-Schema-change events are rejected: evolving a history table rewrites
-closed rows, which breaks the immutability contract — run schema
-evolution on the current-state table and re-derive history instead.
+Schema-change events and column merge policies are rejected: evolving
+a history table rewrites closed rows, and a policy rewrites previous row
+state, which breaks the immutability contract — run them on the
+current-state table and re-derive history instead.
 """
 
 from __future__ import annotations
@@ -41,11 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.udfs import lang_norm_expr
-from .dedup import bucket_expr, dedup_last_writer
-from .lake import SnapshotTable, scan_written_footers
-from .merge import BROADCAST_MAX_ROWS, _lineage_from_harvest, prepare_batch
+from .dedup import bucket_expr
+from .lake import SnapshotTable
+from .merge import PreparedBatch, _committed, _harvest, _prepared_noop, _winner_updates
 from .metrics import BatchMetrics
+from .policies import NO_POLICIES, MergePolicies
 from .schema import KEY_COLS
 
 SCD2_FIELDS = [
@@ -65,37 +68,36 @@ def scd2_table(spark: SparkSession, root: str, n_buckets: int = 8) -> SnapshotTa
 
 
 def apply_scd2_prepared(
-    spark: SparkSession, table: SnapshotTable, prep, **_ignored
+    spark: SparkSession,
+    table: SnapshotTable,
+    prep: PreparedBatch,
+    use_arrow_udfs: bool = False,
+    policies: MergePolicies = NO_POLICIES,
 ) -> BatchMetrics:
     """Phase 2 of a batch in SCD2 mode (phase 1 is merge.prepare_batch).
-    Extra applier kwargs from the shared replay loop (salted_dedup,
-    policies, ...) are accepted and ignored — column policies target the
-    current-state merge, not history rows."""
+    ``use_arrow_udfs`` selects the row transforms' implementation exactly
+    as in the merge; active column ``policies`` raise ValueError — they
+    rewrite the previous row state, which history rows never change."""
     t0 = time.time()
-    m = prep.m
-    if prep.noop:
-        m.wall_secs = time.time() - t0
-        return m
-    if table.last_lsn() != prep.ckpt:
-        prep.slim.unpersist()
-        raise ValueError(
-            f"batch {prep.batch_id} prepared at ckpt={prep.ckpt} but table "
-            f"is at {table.last_lsn()}; re-prepare before applying"
-        )
-    if prep.changes:
+    if _prepared_noop(table, prep, t0):
+        return prep.m
+    if prep.changes or policies.active:
         prep.slim.unpersist()
         raise ValueError(
             "scd2 mode does not accept schema-change events: history rows "
             "are immutable; evolve the current-state table instead"
+            if prep.changes else
+            "scd2 mode does not accept column merge policies: they rewrite "
+            "previous row state, and history rows are immutable"
         )
-    slim, touched = prep.slim, prep.touched
     try:
-        return _apply(spark, table, prep, slim, touched, m, t0)
+        return _apply(table, prep, use_arrow_udfs, t0)
     finally:
-        slim.unpersist()
+        prep.slim.unpersist()
 
 
-def _apply(spark, table, prep, slim, touched, m, t0):
+def _apply(table, prep, use_arrow_udfs, t0):
+    m, touched = prep.m, prep.touched
     if not touched:
         table.commit(
             table.version() + 1, None, [], max(prep.ckpt, prep.lsn_to), [],
@@ -104,13 +106,12 @@ def _apply(spark, table, prep, slim, touched, m, t0):
         m.wall_secs = time.time() - t0
         return m
 
-    do_broadcast = prep.n_keys <= BROADCAST_MAX_ROWS
     target = table.read(buckets=touched)
 
     # close matched CURRENT rows: left join on the slim winner keys, then
     # a pure projection — history rows never move or multiply
-    slim_keys = slim.select(*KEY_COLS, F.col("lsn").alias("_win_lsn"))
-    if do_broadcast:
+    slim_keys = prep.slim.select(*KEY_COLS, F.col("lsn").alias("_win_lsn"))
+    if prep.do_broadcast:
         slim_keys = F.broadcast(slim_keys)
     closed = target.join(slim_keys, KEY_COLS, "left").select(
         *[c for c in target.columns if c != "valid_to"],
@@ -120,33 +121,21 @@ def _apply(spark, table, prep, slim, touched, m, t0):
         )
         .otherwise(F.col("valid_to"))
         .alias("valid_to"),
+        bucket_expr(table.n_buckets).alias("_bucket"),
     )
 
-    # open one new current row per I/U winner (semi-join reduction: the
-    # wide content column crosses the wire once, winners only)
-    winner_ids = slim.where(F.col("op") != "D").select("lsn")
-    if do_broadcast:
-        winner_ids = F.broadcast(winner_ids)
-    upd_src = prep.data.join(winner_ids, "lsn", "semi")
-    winners = (
-        upd_src
-        if m.duplicate_deliveries == 0
-        else dedup_last_writer(upd_src, KEY_COLS, "lsn")
-    )
-    opened = winners.select(
-        "repo", "path", "commit",
-        lang_norm_expr(F.col("lang")).alias("lang"),
-        "content",
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
-        F.col("lsn").alias("valid_from"),
+    # open one new current row per I/U winner: the merge's winner
+    # pipeline, with the applied winner's lsn as the interval start
+    upd, _ = _winner_updates(
+        table, prep, [], use_arrow_udfs=use_arrow_udfs, use_observations=False)
+    opened = upd.where(F.col("op") != "D").select(
+        "repo", "path", "commit", "lang", "content", "content_sha256",
+        F.col("_last_lsn").alias("valid_from"),
         F.lit(None).cast("long").alias("valid_to"),
+        "_bucket",
     )
 
-    final = (
-        closed.unionByName(opened)
-        .withColumn("_bucket", bucket_expr(table.n_buckets))
-        .repartition(max(len(touched), 1), "_bucket")
-    )
+    final = closed.unionByName(opened).repartition(max(len(touched), 1), "_bucket")
     version = table.version() + 1
     out_dir = table.new_data_dir(version)
     final.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
@@ -154,15 +143,14 @@ def _apply(spark, table, prep, slim, touched, m, t0):
     m.winners = prep.n_keys
     m.conflicts_resolved = m.data_events - m.winners
     m.buckets_touched = len(touched)
-    harvest = scan_written_footers(table.root, out_dir)
-    m.lineage = _lineage_from_harvest(harvest)
+    t_phase = time.time()
+    harvest = _harvest(table, m, out_dir)
     m.rows_out = sum(int(v["rows"]) for v in m.lineage.values())
-    table.commit(
+    committed = table.commit(
         version, out_dir, touched, max(prep.ckpt, prep.lsn_to), [], m.to_dict(),
         bucket_refs={b: v["files"] for b, v in harvest.items()},
     )
-    m.wall_secs = time.time() - t0
-    return m
+    return _committed(m, committed, t_phase, t0)
 
 
 def replay_scd2(
@@ -172,7 +160,8 @@ def replay_scd2(
     batch_size: int = 1_000_000,
     **kw,
 ) -> list[BatchMetrics]:
-    """The standard pipelined replay loop with the SCD2 applier."""
+    """The standard replay loop (prepare one batch ahead) with the SCD2
+    applier."""
     from .runner import replay
 
     return replay(

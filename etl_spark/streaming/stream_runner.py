@@ -59,7 +59,6 @@ def stream_replay(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    salted_dedup: bool = False,
     use_arrow_udfs: bool = False,
     collected_metrics: list[BatchMetrics] | None = None,
     policies=None,
@@ -127,7 +126,6 @@ def stream_replay(
             table.version() + 1,
             int(bounds["lo"]) - 1,
             int(bounds["hi"]),
-            salted_dedup=salted_dedup,
             use_arrow_udfs=use_arrow_udfs,
             policies=policies if policies is not None else NO_POLICIES,
             # CollectMetrics under a Union never reports inside a

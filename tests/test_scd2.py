@@ -82,17 +82,37 @@ def test_resume_is_idempotent(spark, hist):
     assert t.version() == 4
 
 
-def test_schema_events_rejected(spark, tmp_path):
+@pytest.mark.parametrize("rejected", ["schema_event", "policies"])
+def test_schema_events_rejected(spark, tmp_path, rejected):
+    """History rows are immutable, so what would rewrite them fails
+    loudly instead of being ignored: schema-change events and active
+    column merge policies."""
     from etl_spark.cdc.gen import SchemaEvent
+    from etl_spark.cdc.policies import MergePolicies
 
-    cfg = GenConfig(
-        n_events=600, n_keys=40, seed=5,
-        schema_events=(SchemaEvent(lsn=300, kind="add", column="stars", new_type="int"),),
+    schema_events = (
+        (SchemaEvent(lsn=300, kind="add", column="stars", new_type="int"),)
+        if rejected == "schema_event" else ()
     )
+    cfg = GenConfig(n_events=600, n_keys=40, seed=5, schema_events=schema_events)
     df = generate_events(spark, cfg)
     t = scd2_table(spark, str(tmp_path / "hist"), n_buckets=4)
-    with pytest.raises(ValueError, match="schema-change"):
-        replay_scd2(spark, df, t, batch_size=600)
+    kw = {"policies": MergePolicies(track_seen=True)} if rejected == "policies" else {}
+    with pytest.raises(ValueError, match="schema-change" if not kw else "policies"):
+        replay_scd2(spark, df, t, batch_size=600, **kw)
+    assert t.version() == 0
+
+
+def test_arrow_udfs_match_default(spark, tmp_path):
+    """SCD2 rows come out of the merge's row projection, so the Arrow
+    UDF transforms apply to history rows too, byte-identically."""
+    df = generate_events(spark, GenConfig(n_events=600, n_keys=40, seed=9))
+    rows = []
+    for arrow in (False, True):
+        t = scd2_table(spark, str(tmp_path / f"hist_arrow{arrow}"), n_buckets=4)
+        replay_scd2(spark, df, t, batch_size=300, use_arrow_udfs=arrow)
+        rows.append(sorted(map(tuple, t.read().collect())))
+    assert rows[0] == rows[1]
 
 
 def test_delete_closes_without_reopening(spark, tmp_path):

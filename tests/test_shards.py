@@ -320,3 +320,38 @@ def test_non_canonical_entry_raises_naming_the_bucket(spark, tmp_path):
         json.dump(raw, f)
     with pytest.raises(ValueError, match=f"bucket {bucket}: manifest stores"):
         SnapshotTable(spark, t.root).read()
+
+
+def test_shard_memo_bounded_by_live_buckets(spark, tmp_path):
+    """A long-lived driver's shard memo stays O(live buckets): each
+    publish keeps only the entries it just published, and untouched
+    buckets still carry by pointer."""
+    t = SnapshotTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    for v in range(1, 31):
+        b = v % 4
+        ref = [f"data/v{v}/_bucket={b}/part-0.parquet", 1, "r", "p", "r", "p"]
+        t.commit(v, None, [b], v, [], {}, bucket_refs={str(b): [ref]})
+        live = len(_raw_manifest(t, v)["files"])
+        assert len(t._shard_cache) <= live
+        assert len(t._entry_ptr) <= live
+        if v >= 4:
+            assert t.manifest()["metrics"]["manifest_shards_carried"] == live - 1
+    assert len(_shard_files(t)) == 30
+
+
+def test_expire_keeps_in_flight_writer_version(spark, tmp_path):
+    """Versions above the current one belong to a writer whose commit is
+    in flight: its data dir and a manifest it published after expire
+    read the current version must both survive."""
+    t, _ = _mk(spark, tmp_path / "lake")
+    nxt = t.version() + 1
+    inflight = os.path.join(t.root, "data", f"v{nxt}", "_bucket=0", "x.parquet")
+    os.makedirs(os.path.dirname(inflight))
+    with open(inflight, "wb") as f:
+        f.write(b"PAR1")
+    published = os.path.join(t.root, "manifests", f"v{nxt}.json")
+    with open(published, "w") as f:
+        f.write("{}")
+    t.expire_snapshots(keep_last=1)
+    assert os.path.exists(inflight)
+    assert os.path.exists(published)
