@@ -5,7 +5,7 @@ Reference semantics: ``es_deleting_old_writes/main.py:25-57`` — a
 delete-by-query retention job (``time_field < now-7d``) run as its own
 DAG; retention-by-version analog ``geoinfo/main.py:482-486``.
 
-Physical plan (two Spark actions):
+Physical plan (two Spark actions, three when the output is multi-file):
 1. probe: scan the table WITH the predicate, aggregate matched counts
    per bucket — finds the minimal CoW footprint. Column-pruned to the
    predicate's columns + the key hash.
@@ -15,6 +15,11 @@ Physical plan (two Spark actions):
    harvests their footer key ranges, so later merges prune them file by
    file). Untouched buckets carry forward by manifest reference; buckets
    whose every row matched simply disappear from the manifest.
+3. bloom pass (the commit's, lake.build_file_blooms): the rewrite keeps
+   the matched buckets' input splits, so a bucket that held several
+   files (a compacted, key-rolled layout) is rewritten as several; their
+   key-membership blooms are built by one narrow pass over the files
+   just written. Single-file buckets get none and skip the pass.
 
 The commit does not advance ``last_lsn`` — a delete is table
 maintenance, not log progress, so replay/resume semantics are
@@ -69,9 +74,7 @@ def delete_where(
         .where(~F.coalesce(pred, F.lit(False)))
         .withColumn("_bucket", bucket_expr(table.n_buckets))
     )
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
-    keep.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+    version, out_dir = table.write_buckets(keep)
 
     metrics["wall_secs"] = round(time.time() - t0, 3)
     table.commit(

@@ -54,6 +54,19 @@ table layer hand-builds the Iceberg properties the engine needs:
   session via an immutable cache), and an entry of any other shape — a
   table written by an older engine — raises ``ValueError`` naming the
   bucket rather than being misread.
+- **One write path** (the Iceberg writer/table split: writers produce
+  data files, the table owns their stats and the commit). Every commit
+  kind that writes data — CoW merge, delta, SCD2, DELETE, compaction,
+  rebucket — hands its rows (carrying ``_bucket``, in the caller's
+  partitioning and sort order) to ``write_buckets``, which allocates
+  the next version and writes ``data/v{N}/_bucket={b}/``. ``commit`` /
+  ``commit_delta`` then harvest the written footers (file refs, lineage,
+  ``bytes_written``, ``files_rewritten``, ``rows_out`` — set in the
+  commit's metrics), ``commit`` stamps key blooms on the fresh refs of
+  every bucket it commits with two or more refs, and both publish
+  through one top-manifest builder. Callers keep only what is theirs:
+  the rows, the touched buckets, the checkpoint and schema, and (the
+  file-level merge) the cold refs carried by reference.
 
 Layout:
     root/
@@ -314,12 +327,12 @@ def build_file_blooms(
     SQL expressions (xxhash64 double hashing, see _bloom_member_sql),
     so build/probe can never drift.
 
-    ``eligible`` restricts the build to those buckets (by key): callers
-    skip SINGLE-file buckets — with one file per bucket the file IS the
-    bucket, so a bloom can't save a rewrite worth its build cost, and
-    skipping them makes the build FREE on whole-bucket-rewrite
-    workloads (the uniform headline replay). A skipped file simply has
-    no bloom and always counts as a hit (fail closed)."""
+    ``eligible`` restricts the build to those buckets (by key):
+    ``SnapshotTable.commit`` skips buckets it commits with ONE file —
+    the file IS the bucket, so a bloom can't save a rewrite worth its
+    build cost, and skipping them makes the build FREE on whole-bucket-
+    rewrite workloads (the uniform headline replay). A skipped file
+    simply has no bloom and always counts as a hit (fail closed)."""
     import base64
     import struct as _struct
 
@@ -485,13 +498,7 @@ class SnapshotTable:
     def manifest(self) -> dict:
         v = self.version()
         if v == 0:
-            return {
-                "version": 0,
-                "last_lsn": 0,
-                "dyn_schema": [],
-                "files": {},
-                "n_buckets": self.n_buckets,
-            }
+            return self.manifest_at(0)
         m = self._raw_manifest(v)
         m["files"] = self._resolve_files(m["files"])
         return m
@@ -840,6 +847,44 @@ class SnapshotTable:
     def new_data_dir(self, version: int) -> str:
         return os.path.join(self.root, "data", f"v{version}")
 
+    def write_buckets(
+        self, rows: DataFrame, target_file_rows: int | None = None
+    ) -> tuple[int, str]:
+        """Write ``rows`` (carrying a ``_bucket`` column) as the data
+        files of the next version, ``data/v{N}/_bucket={b}/``; returns
+        ``(N, dir)`` for the ``commit`` / ``commit_delta`` that publishes
+        them. The caller owns the rows' partitioning and sort order (it
+        decides the file count per bucket and each file's key range);
+        ``target_file_rows`` additionally rolls a bucket's files at that
+        many rows. N is the committed version + 1, read now: the
+        exclusive manifest link decides which of two racing writers
+        publishes it."""
+        version = self.version() + 1
+        out_dir = self.new_data_dir(version)
+        w = rows.write.mode("overwrite")
+        if target_file_rows:
+            w = w.option("maxRecordsPerFile", int(target_file_rows))
+        w.partitionBy("_bucket").parquet(out_dir)
+        return version, out_dir
+
+    def _harvest(self, written_dir: str, metrics: dict) -> dict:
+        """Footer harvest of ``written_dir`` (scan_written_footers: pure
+        metadata, no Spark job) and the metrics it yields, set in
+        ``metrics``: per-bucket ``lineage``, ``rows_out``,
+        ``files_rewritten``, ``bytes_written``, and the ``lineage``
+        phase time."""
+        t0 = time.time()
+        harvest = scan_written_footers(self.root, written_dir)
+        metrics["lineage"] = {
+            b: {"rows": v["rows"], "max_lsn": v["max_lsn"], "dir": v["dir"]}
+            for b, v in harvest.items()
+        }
+        metrics["rows_out"] = sum(v["rows"] for v in harvest.values())
+        metrics["files_rewritten"] = sum(len(v["files"]) for v in harvest.values())
+        metrics["bytes_written"] = sum(v["bytes"] for v in harvest.values())
+        metrics.setdefault("phase_secs", {})["lineage"] = round(time.time() - t0, 3)
+        return harvest
+
     def commit(
         self,
         version: int,
@@ -849,43 +894,47 @@ class SnapshotTable:
         dyn_schema: list[tuple[str, str]],
         metrics: dict,
         full_rewrite: bool = False,
-        bucket_refs: dict | None = None,
+        carried_refs: dict | None = None,
     ) -> dict:
-        """Publish version N: new base files + carried-forward entries.
+        """Publish version N: the files under ``written_dir`` as new base
+        files, plus carried-forward entries.
 
         Untouched buckets keep their entries by reference; each touched
         bucket gets a fresh plain entry ``{"base": refs, "deltas": []}``
+        whose refs are its ``carried_refs`` (bucket -> file refs of the
+        previous version that a file-level CoW merge carries forward
+        unread) followed by the footer refs of its freshly written files
         (a bucket left with no refs disappears from the manifest).
         ``full_rewrite=True`` (rename/widen migration, rebucket): nothing
-        carries. The refs come from ``bucket_refs`` (bucket -> file
-        refs) when the caller has them — a file-level CoW merge mixes
-        freshly written files with COLD refs of the previous version
-        carried forward by reference — else from the footers of the
-        files under ``written_dir`` (scan_written_footers).
-        """
+        carries.
+
+        The fresh refs of every bucket committed with two or more refs
+        get write-time key-membership blooms (build_file_blooms) — one
+        narrow pass over the files just written, so later merges' insert-
+        fanout pruning is metadata-only. With one ref per bucket the file
+        IS the bucket and a bloom buys nothing, so whole-bucket rewrites
+        pay zero here."""
         prev = self.manifest()
         files: dict[str, dict] = {} if full_rewrite else dict(prev["files"])
         for b in touched_buckets:
             files.pop(str(b), None)
-        if bucket_refs is None and written_dir:
-            bucket_refs = {
-                b: v["files"]
-                for b, v in scan_written_footers(self.root, written_dir).items()
-            }
-        for b, refs in (bucket_refs or {}).items():
+        carried = carried_refs or {}
+        harvest: dict = {}
+        if written_dir:
+            harvest = self._harvest(written_dir, metrics)
+            t0 = time.time()
+            build_file_blooms(self.spark, self.root, harvest, eligible={
+                b for b, v in harvest.items()
+                if len(v["files"]) + len(carried.get(b, [])) >= 2
+            })
+            # own phase key: the one Spark job of the commit
+            metrics["phase_secs"]["bloom_build"] = round(time.time() - t0, 3)
+        for b in sorted(set(carried) | set(harvest)):
+            refs = carried.get(b, []) + (harvest[b]["files"] if b in harvest else [])
             if refs:
-                files[str(b)] = {"base": refs, "deltas": []}
-        manifest = {
-            "version": version,
-            "parent": prev["version"],
-            "last_lsn": int(last_lsn),
-            "dyn_schema": [list(c) for c in dyn_schema],
-            "files": files,
-            "n_buckets": self.n_buckets,
-            "committed_at": time.time(),
-            "metrics": metrics,
-        }
-        return self._publish(version, manifest, metrics)
+                files[b] = {"base": refs, "deltas": []}
+        return self._publish(
+            version, prev["version"], last_lsn, dyn_schema, files, metrics)
 
     def commit_delta(
         self,
@@ -903,26 +952,11 @@ class SnapshotTable:
         (maintain.compact) folds a chain back to plain base files."""
         prev = self.manifest()
         files: dict = dict(prev["files"])
-        rel = os.path.relpath(delta_dir, self.root)
-        for entry in sorted(os.listdir(delta_dir)):
-            if entry.startswith("_bucket="):
-                b = entry.split("=", 1)[1]
-                cur = files.get(b, {"base": [], "deltas": []})
-                files[b] = {
-                    "base": cur["base"],
-                    "deltas": cur["deltas"] + [os.path.join(rel, entry)],
-                }
-        manifest = {
-            "version": version,
-            "parent": prev["version"],
-            "last_lsn": int(last_lsn),
-            "dyn_schema": [list(c) for c in dyn_schema],
-            "files": files,
-            "n_buckets": self.n_buckets,
-            "committed_at": time.time(),
-            "metrics": metrics,
-        }
-        return self._publish(version, manifest, metrics)
+        for b, v in self._harvest(delta_dir, metrics).items():
+            cur = files.get(b, {"base": [], "deltas": []})
+            files[b] = {"base": cur["base"], "deltas": cur["deltas"] + [v["dir"]]}
+        return self._publish(
+            version, prev["version"], last_lsn, dyn_schema, files, metrics)
 
     def rollback(self, to_version: int) -> dict:
         """Restore the table to an earlier committed snapshot as a NEW
@@ -955,32 +989,34 @@ class SnapshotTable:
             "rolled_back_from": cur,
             "rolled_back_to": to_version,
         }
-        manifest = {
-            "version": version,
-            "parent": cur,
-            "last_lsn": int(tgt["last_lsn"]),
-            "dyn_schema": [list(c) for c in tgt["dyn_schema"]],
-            "files": dict(tgt["files"]),
-            # the TARGET's bucket count, not the current one: a rebucket
-            # commit between to_version and now changed the layout, and
-            # restoring the old dirs under the new count would misroute
-            # every subsequent merge (wrong-bucket rewrites, stale rows
-            # staying referenced). Adopt it on this handle too, exactly
-            # like the constructor adopts the committed count on open.
-            "n_buckets": int(tgt["n_buckets"]),
-            "committed_at": time.time(),
-            "metrics": metrics,
-        }
-        out = self._publish(version, manifest, metrics)
+        # the TARGET's bucket count, not the current one: a rebucket
+        # commit between to_version and now changed the layout, and
+        # restoring the old dirs under the new count would misroute
+        # every subsequent merge (wrong-bucket rewrites, stale rows
+        # staying referenced). Adopt it on this handle too, exactly
+        # like the constructor adopts the committed count on open.
+        out = self._publish(
+            version, cur, tgt["last_lsn"], tgt["dyn_schema"],
+            dict(tgt["files"]), metrics, n_buckets=int(tgt["n_buckets"]))
         self.n_buckets = int(tgt["n_buckets"])
         return out
 
-    def _publish(self, version: int, manifest: dict, metrics: dict) -> dict:
-        """Shard + publish. ``manifest["files"]`` arrives RESOLVED (bucket
-        -> entry); on disk each bucket stores a pointer into an immutable
-        content-addressed shard file. An entry object that came out of a
-        resolved manifest hits the identity memo and carries its pointer
-        with ZERO serialization work — so an untouched bucket costs one
+    def _publish(
+        self,
+        version: int,
+        parent: int,
+        last_lsn: int,
+        dyn_schema: list,
+        files: dict,
+        metrics: dict,
+        n_buckets: int | None = None,
+    ) -> dict:
+        """Build version N's top manifest (``n_buckets`` defaults to this
+        handle's), shard it and publish it. ``files`` arrives RESOLVED
+        (bucket -> entry); on disk each bucket stores a pointer into an
+        immutable content-addressed shard file. An entry object that
+        came out of a resolved manifest hits the identity memo and
+        carries its pointer with ZERO serialization work — so an untouched bucket costs one
         dict lookup per commit, whatever its file count, and the bytes a
         commit writes are O(touched buckets' refs) + the pointer map.
         Content addressing also dedups across versions: a rollback's
@@ -988,6 +1024,16 @@ class SnapshotTable:
         The returned (and cached) manifest stays in resolved form."""
         import hashlib
 
+        manifest = {
+            "version": version,
+            "parent": parent,
+            "last_lsn": int(last_lsn),
+            "dyn_schema": [list(c) for c in dyn_schema],
+            "files": files,
+            "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
+            "committed_at": time.time(),
+            "metrics": metrics,
+        }
         shards_dir = os.path.join(self.root, "manifests", "shards")
         os.makedirs(shards_dir, exist_ok=True)
         raw_files: dict[str, dict] = {}

@@ -21,13 +21,7 @@ import time
 from pyspark.sql import SparkSession
 
 from .dedup import bucket_expr
-from .lake import (
-    SnapshotTable,
-    _chain,
-    _entry_parts,
-    build_file_blooms,
-    scan_written_footers,
-)
+from .lake import SnapshotTable, _chain, _entry_parts
 
 
 def _n_files(root: str, rel: str) -> int:
@@ -152,6 +146,10 @@ def compact(
     rewrites only the files a batch's keys can live in) — compaction is
     what lays out the file groups that cap CoW write amplification under
     sparse-update workloads. Default None keeps one file per bucket.
+    The commit stamps key-membership blooms on every bucket rewritten
+    into two or more files, so insert-fanout exoneration is metadata-
+    only from the first post-compaction batch; the returned metrics
+    carry the commit's ``files_rewritten`` and ``bytes_written``.
     """
     t0 = time.time()
     manifest = table.manifest()
@@ -195,22 +193,7 @@ def compact(
         # bloom, compounding the per-key FP into a near-certain hit)
         .sortWithinPartitions("_bucket", *table.key_cols)
     )
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
-    w = rows.write.mode("overwrite")
-    if target_file_rows:
-        w = w.option("maxRecordsPerFile", int(target_file_rows))
-    w.partitionBy("_bucket").parquet(out_dir)
-    harvest = scan_written_footers(table.root, out_dir)
-    # compaction lays out the key-contiguous file groups future merges
-    # prune against; stamp their membership blooms here so insert-fanout
-    # exoneration is metadata-only from the first post-compaction batch
-    # (multi-file buckets only — a single-file bucket IS its file, a
-    # bloom can't save it a rewrite)
-    eligible = {b for b, v in harvest.items() if len(v["files"]) >= 2}
-    build_file_blooms(spark, table.root, harvest, eligible=eligible)
-    metrics["files_written"] = sum(len(v["files"]) for v in harvest.values())
-    metrics["bytes_written"] = sum(v["bytes"] for v in harvest.values())
+    version, out_dir = table.write_buckets(rows, target_file_rows)
     metrics["wall_secs"] = round(time.time() - t0, 3)
     table.commit(
         version,
@@ -219,7 +202,6 @@ def compact(
         int(manifest["last_lsn"]),
         [tuple(c) for c in manifest["dyn_schema"]],
         metrics,
-        bucket_refs={b: v["files"] for b, v in harvest.items()},
     )
     metrics["version"] = version
     return metrics
@@ -290,9 +272,7 @@ def rebucket(spark: SparkSession, table: SnapshotTable, new_n_buckets: int) -> d
         .withColumn("_bucket", bucket_expr(new_n_buckets))
         .repartition(new_n_buckets, "_bucket")
     )
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
-    rows.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+    version, out_dir = table.write_buckets(rows)
     old_n = table.n_buckets
     table.n_buckets = new_n_buckets  # manifest records the new count
     metrics = {

@@ -32,8 +32,9 @@ winner semantics live in one place:
          UNION the non-delete winners repartitioned by _bucket, ONE
          write partitionBy(_bucket); delta: the winners alone (deletes
          as tombstone rows), one write;
-       - driver-side footer harvest (lineage, file refs), write-time
-         key blooms for multi-file CoW buckets, then the manifest commit.
+       - the manifest commit (lake.SnapshotTable.commit), which
+         harvests the written footers (lineage, file refs) and stamps
+         write-time key blooms on buckets committed with several files.
 
 Spark counts more jobs than actions here (AQE query stages and broadcast
 builds run as jobs of their own): a traced 3-batch microbatch_cow replay
@@ -75,12 +76,7 @@ from .evolve import (
     remap_extra_keys,
     requires_rewrite,
 )
-from .lake import (
-    TOMBSTONE_COL,
-    SnapshotTable,
-    build_file_blooms,
-    scan_written_footers,
-)
+from .lake import TOMBSTONE_COL, SnapshotTable
 from .metrics import BatchMetrics
 from .policies import BASE_EVENT_VALUE_COLS, NO_POLICIES, SEEN_COLS, MergePolicies
 from .schema import KEY_COLS
@@ -649,7 +645,7 @@ def apply_prepared(
                 policies, t0,
             )
         return _merge_and_commit(
-            spark, table, prep, dyn_final, full_rewrite, use_arrow_udfs,
+            table, prep, dyn_final, full_rewrite, use_arrow_udfs,
             use_observations, policies, t0,
         )
     finally:
@@ -763,34 +759,29 @@ def _op_counts(obs: Observation | None, prep: PreparedBatch) -> tuple[int, int]:
     return n_iu, n_d
 
 
-def _harvest(table: SnapshotTable, m: BatchMetrics, out_dir: str) -> dict:
-    """Footer harvest of the files a batch just wrote (lake.
-    scan_written_footers: row counts + key/lsn column stats, pure
-    metadata, no Spark job) -> per-bucket lineage and ``bytes_written``."""
-    harvest = scan_written_footers(table.root, out_dir)
-    m.lineage = {
-        b: {"rows": v["rows"], "max_lsn": v["max_lsn"], "dir": v["dir"]}
-        for b, v in harvest.items()
-    }
-    m.bytes_written = sum(v["bytes"] for v in harvest.values())
-    return harvest
-
-
 def _committed(m: BatchMetrics, committed: dict, t_phase: float,
                t0: float) -> BatchMetrics:
-    """Commit-metadata metrics of a published manifest; closes the
-    ``commit`` phase and the batch wall."""
-    m.manifest_bytes = int(
-        committed["metrics"].get("manifest_bytes_written") or 0)
-    m.manifest_shards_carried = int(
-        committed["metrics"].get("manifest_shards_carried") or 0)
-    m.phase_secs["commit"] = round(time.time() - t_phase, 3)
+    """Copy what the commit measured into ``m`` — the footer-harvest
+    metrics and their ``lineage`` / ``bloom_build`` phase times, and the
+    commit-metadata bytes — then close the ``commit`` phase (the publish
+    alone) and the batch wall."""
+    cm = committed["metrics"]
+    m.lineage = cm["lineage"]
+    m.rows_out = int(cm["rows_out"])
+    m.files_rewritten = int(cm["files_rewritten"])
+    m.bytes_written = int(cm["bytes_written"])
+    m.manifest_bytes = int(cm.get("manifest_bytes_written") or 0)
+    m.manifest_shards_carried = int(cm.get("manifest_shards_carried") or 0)
+    m.phase_secs.update(cm["phase_secs"])
+    m.phase_secs["commit"] = round(
+        time.time() - t_phase - m.phase_secs["lineage"]
+        - m.phase_secs.get("bloom_build", 0.0), 3)
     m.wall_secs = time.time() - t0
     return m
 
 
 def _merge_and_commit(
-    spark, table, prep, dyn_final, full_rewrite, use_arrow_udfs,
+    table, prep, dyn_final, full_rewrite, use_arrow_udfs,
     use_observations, policies, t0,
 ):
     m, slim = prep.m, prep.slim
@@ -838,7 +829,6 @@ def _merge_and_commit(
         else Observation(f"merge_b{prep.batch_id}")
     )
     tgt_counts = [
-        F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
         F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
         F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
     ]
@@ -870,17 +860,15 @@ def _merge_and_commit(
     )
     final = kept.unionByName(upserts)
 
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
     t_phase = time.time()
-    final.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+    version, out_dir = table.write_buckets(final)
     m.phase_secs["merge_write"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
 
     n_iu, n_d = _op_counts(win_obs, prep)
     tgt = _observed(tgt_obs)
     if tgt is None and not target_known_empty:
-        # recompute the carry/match split from a column-pruned target
+        # recompute the match split from a column-pruned target
         # scan joined to the (cached, tiny) slim winners
         tgt = (
             target.select(*KEY_COLS)
@@ -893,43 +881,14 @@ def _merge_and_commit(
     m.updated = replaced
     m.inserted = n_iu - replaced
     m.delete_noop = n_d - m.deleted
-    m.rows_out = int(tgt.get("carried") or 0) + n_iu
     m.buckets_touched = len(touched)
-    m.phase_secs["post_metrics"] = round(time.time() - t_phase, 3)
-
-    # per-partition lineage + per-file key-range refs from the freshly
-    # written CoW files' parquet footers. This is the same stats harvest
-    # an Iceberg manifest commit performs, scoped to the touched buckets;
-    # the refs are what future merges prune against (file-level CoW).
-    t_phase = time.time()
-    harvest = _harvest(table, m, out_dir)
-    # write-time key-membership blooms (one narrow pass over the files
-    # just written, O(batch output)) so the NEXT merges' insert-fanout
-    # pruning is metadata-only — lake.build_file_blooms. Only multi-file
-    # buckets (counting carried cold refs): with one file per bucket the
-    # file IS the bucket and a bloom buys nothing, so whole-bucket-
-    # rewrite workloads pay zero here.
-    eligible = {
-        b for b, v in harvest.items()
-        if len(v["files"]) + len(cold_refs.get(b, [])) >= 2
-    }
-    t_bloom = time.time()
-    build_file_blooms(spark, table.root, harvest, eligible=eligible)
-    # own phase key: this is the one Spark job in the metadata phases
-    # (O(batch output) key-column pass), and folding it into the lineage
-    # wall hid it in the bench phase tables
-    m.phase_secs["bloom_build"] = round(time.time() - t_bloom, 3)
-    m.files_rewritten = sum(len(v["files"]) for v in harvest.values())
     m.files_carried = int(split_stats.get("files_cold") or 0)
     m.rows_carried_ref = int(split_stats.get("rows_cold") or 0)
-    # new base refs per touched bucket: carried COLD refs + the files
-    # just written (a bucket with neither drops from the manifest)
-    refs = {
-        b: cold_refs.get(b, []) + (harvest[b]["files"] if b in harvest else [])
-        for b in {str(x) for x in touched} | set(harvest)
-    }
-    m.phase_secs["lineage"] = round(
-        time.time() - t_phase - m.phase_secs.get("bloom_build", 0.0), 3)
+    m.phase_secs["post_metrics"] = round(time.time() - t_phase, 3)
+
+    # the commit harvests the written footers into per-file key-range
+    # refs (what future merges prune against) and commits each touched
+    # bucket as its COLD refs carried by reference + the files just written
     t_phase = time.time()
     committed = table.commit(
         version,
@@ -939,7 +898,7 @@ def _merge_and_commit(
         dyn_final,
         m.to_dict(),
         full_rewrite=full_rewrite,
-        bucket_refs=refs,
+        carried_refs=cold_refs,
     )
     return _committed(m, committed, t_phase, t0)
 
@@ -989,10 +948,8 @@ def _delta_commit(
         # O(touched buckets) files, not O(tasks x buckets)
         .repartition(max(len(touched), 1), "_bucket")
     )
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
     t_phase = time.time()
-    out.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+    version, out_dir = table.write_buckets(out)
     m.phase_secs["delta_write"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
 
@@ -1001,13 +958,9 @@ def _delta_commit(
     m.updated = 0
     m.deleted = n_d
     m.delete_noop = 0
-    m.rows_out = n_iu + n_d
     m.buckets_touched = len(touched)
     m.phase_secs["post_metrics"] = round(time.time() - t_phase, 3)
 
-    t_phase = time.time()
-    _harvest(table, m, out_dir)
-    m.phase_secs["lineage"] = round(time.time() - t_phase, 3)
     t_phase = time.time()
     committed = table.commit_delta(
         version, out_dir, max(prep.ckpt, prep.lsn_to), dyn_final, m.to_dict())

@@ -328,7 +328,7 @@ def main(argv: list[str] | None = None) -> None:
                 + sum(int(c.get("bytes_written", 0)) for c in compactions),
                 "rows_out": sum(bm.rows_out for bm in metrics),
                 "files_rewritten": sum(bm.files_rewritten for bm in metrics)
-                + sum(int(c.get("files_written", 0)) for c in compactions),
+                + sum(int(c.get("files_rewritten", 0)) for c in compactions),
                 "files_carried": sum(bm.files_carried for bm in metrics),
                 # commit METADATA bytes (new manifest shards + pointer
                 # map): the sharded-manifest evidence — O(touched

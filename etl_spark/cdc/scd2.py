@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from .dedup import bucket_expr
 from .lake import SnapshotTable
-from .merge import PreparedBatch, _committed, _harvest, _prepared_noop, _winner_updates
+from .merge import PreparedBatch, _committed, _prepared_noop, _winner_updates
 from .metrics import BatchMetrics
 from .policies import NO_POLICIES, MergePolicies
 from .schema import KEY_COLS
@@ -136,20 +136,14 @@ def _apply(table, prep, use_arrow_udfs, t0):
     )
 
     final = closed.unionByName(opened).repartition(max(len(touched), 1), "_bucket")
-    version = table.version() + 1
-    out_dir = table.new_data_dir(version)
-    final.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+    version, out_dir = table.write_buckets(final)
 
     m.winners = prep.n_keys
     m.conflicts_resolved = m.data_events - m.winners
     m.buckets_touched = len(touched)
     t_phase = time.time()
-    harvest = _harvest(table, m, out_dir)
-    m.rows_out = sum(int(v["rows"]) for v in m.lineage.values())
     committed = table.commit(
-        version, out_dir, touched, max(prep.ckpt, prep.lsn_to), [], m.to_dict(),
-        bucket_refs={b: v["files"] for b, v in harvest.items()},
-    )
+        version, out_dir, touched, max(prep.ckpt, prep.lsn_to), [], m.to_dict())
     return _committed(m, committed, t_phase, t0)
 
 

@@ -336,3 +336,36 @@ def test_bloom_build_skips_buckets_with_no_bloomable_ref(spark, tmp_path,
     assert scanned == [os.path.join(str(tmp_path), harvest["0"]["dir"])]
     assert all(len(r) == 7 for r in harvest["0"]["files"])
     assert all(len(r) == 6 for r in harvest["1"]["files"])
+
+
+def test_bloom_pass_resolved_at_call_time(spark, tmp_path, monkeypatch):
+    """Commits call lake.build_file_blooms through the lake module when
+    they run, so a wrapper installed there (the benchmark's per-layer
+    tracer) sees the bloom pass of a compaction and of a CoW merge into
+    a multi-file bucket instead of silently reading 0."""
+    import etl_spark.cdc.lake as lake_mod
+
+    seen: list = []
+    real = lake_mod.build_file_blooms
+
+    def spy(spark_, root, harvest, eligible=None):
+        seen.append(sorted(eligible or ()))
+        return real(spark_, root, harvest, eligible=eligible)
+
+    monkeypatch.setattr(lake_mod, "build_file_blooms", spy)
+    n = 200
+    t = SnapshotTable(spark, str(tmp_path / "lake"), n_buckets=1)
+    replay(spark, _events(spark, [
+        (i + 1, "I", "r", f"p{i:03d}", f"c{i}", "py", f"body {i}",
+         "2024-01-01 00:00:00", None, None)
+        for i in range(n)
+    ]), t, batch_size=n)
+    compact(spark, t, target_file_rows=50, max_files_per_bucket=0)
+    assert seen[-1] == ["0"], seen
+    replay(spark, _events(spark, [
+        (n + 1, "U", "r", "p010", "cx", "py", "body 10 v2",
+         "2024-01-02 00:00:00", None, None),
+    ]), t, batch_size=10)
+    assert len(seen) == 3 and seen[-1] == ["0"], seen
+    assert t.manifest()["metrics"]["files_carried"] > 0
+    assert all(len(r) == 7 for r in t.manifest()["files"]["0"]["base"])

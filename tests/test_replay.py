@@ -83,7 +83,12 @@ def test_observed_and_recomputed_metrics_agree(spark, tmp_path, write_mode):
     """The streaming front-end applies with use_observations=False, so
     every counter is recomputed after the write from the cached slim
     (and, for CoW, a pruned target scan) instead of read from the write
-    job's observations. Both routes must report the same counters."""
+    job's observations. Both routes must report the same counters, and
+    each batch's ``files_rewritten`` is the parquet file count of the
+    ``data/v{N}`` dir its commit wrote, in either write mode."""
+    import glob
+    import os
+
     from etl_spark.cdc.merge import apply_batch
 
     cfg = GenConfig(n_events=1500, n_keys=90, hot_frac=0.3, hot_keys=6,
@@ -109,6 +114,10 @@ def test_observed_and_recomputed_metrics_agree(spark, tmp_path, write_mode):
     assert sum(m["deleted"] for m in runs[True]) > 0
     for on, off in zip(runs[True], runs[False]):
         assert {k: on[k] for k in counters} == {k: off[k] for k in counters}
+    for v, m in enumerate(runs[True], start=1):
+        written = glob.glob(os.path.join(
+            str(tmp_path / "lake_obsTrue"), "data", f"v{v}", "*", "*.parquet"))
+        assert m["files_rewritten"] == len(written) > 0, (v, m)
 
 
 def test_replay_calls_merge_functions_at_call_time(spark, small_log, tmp_path,

@@ -28,7 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.cdc.delete import delete_where
-from etl_spark.cdc.lake import SnapshotTable, SnapshotExpiredError
+from etl_spark.cdc.lake import BLOOM_MAX_ROWS, SnapshotTable, SnapshotExpiredError
 from etl_spark.cdc.maintain import compact, rebucket
 from etl_spark.cdc.runner import replay
 from etl_spark.cdc.scd2 import replay_scd2, scd2_table
@@ -212,7 +212,6 @@ def _assert_one_entry_shape(t):
             with open(os.path.join(mdir, name)) as f:
                 files = json.load(f)["files"]
             assert all(list(e) == ["ptr"] for e in files.values()), files
-    refs = []
     for name in _shard_files(t):
         with open(os.path.join(mdir, "shards", name)) as f:
             e = json.load(f)
@@ -220,8 +219,6 @@ def _assert_one_entry_shape(t):
         assert all(len(r) in (6, 7) for r in e["base"]), e
         assert all(r[0].endswith(".parquet") for r in e["base"]), e
         assert all(isinstance(d, str) for d in e["deltas"]), e
-        refs.extend(e["base"])
-    return refs
 
 
 def _later(spark, n, *rows):
@@ -250,6 +247,13 @@ def _delete(spark, t, n):
     delete_where(spark, t, "path < 'p050'")
 
 
+def _delete_compacted(spark, t, n):
+    # DELETE over buckets compacted into several key-rolled files: the
+    # rewrite keeps the input splits, so it commits multi-file buckets
+    _compact(spark, t, n)
+    _delete(spark, t, n)
+
+
 def _scd2(spark, t, n):
     replay_scd2(spark, _later(spark, n, ("U", "p000"), ("D", "p001")), t,
                 batch_size=10)
@@ -273,13 +277,16 @@ def _schema_fast_forward(spark, t, n):
 
 
 @pytest.mark.parametrize("kind", [
-    _cow_merge, _delta, _compact, _delete, _scd2, _rebucket, _rollback,
-    _schema_fast_forward,
+    _cow_merge, _delta, _compact, _delete, _delete_compacted, _scd2,
+    _rebucket, _rollback, _schema_fast_forward,
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_every_commit_kind_stores_one_entry_shape(spark, tmp_path, kind):
     """Each commit kind writes only {"base", "deltas"} entries behind
     shard pointers, and a fresh handle (cold shard cache) reads back
-    exactly what the writer's handle reads."""
+    exactly what the writer's handle reads. Every kind follows the one
+    bloom rule: a ref a commit wrote carries a key bloom iff its bucket
+    commits with two or more refs and the ref has at most
+    BLOOM_MAX_ROWS rows."""
     if kind is _scd2:
         t = scd2_table(spark, str(tmp_path / "lake"), n_buckets=4)
         n = 200
@@ -291,9 +298,13 @@ def test_every_commit_kind_stores_one_entry_shape(spark, tmp_path, kind):
     v0 = t.version()
     kind(spark, t, n)
     assert t.version() > v0
-    refs = _assert_one_entry_shape(t)
-    if kind is _compact:
-        assert any(len(r) == 7 for r in refs), "compaction stamps blooms"
+    _assert_one_entry_shape(t)
+    for v in range(v0 + 1, t.version() + 1):
+        for b, e in t.manifest_at(v)["files"].items():
+            for r in e["base"]:
+                if r[0].startswith(f"data/v{v}/"):
+                    want = len(e["base"]) >= 2 and r[1] <= BLOOM_MAX_ROWS
+                    assert (len(r) == 7) == want, (v, b, len(e["base"]), r[:2])
     fresh = SnapshotTable(spark, t.root, base_fields=t.base_fields)
     assert _rows(fresh) == _rows(t)
 
@@ -330,7 +341,7 @@ def test_shard_memo_bounded_by_live_buckets(spark, tmp_path):
     for v in range(1, 31):
         b = v % 4
         ref = [f"data/v{v}/_bucket={b}/part-0.parquet", 1, "r", "p", "r", "p"]
-        t.commit(v, None, [b], v, [], {}, bucket_refs={str(b): [ref]})
+        t.commit(v, None, [b], v, [], {}, carried_refs={str(b): [ref]})
         live = len(_raw_manifest(t, v)["files"])
         assert len(t._shard_cache) <= live
         assert len(t._entry_ptr) <= live
